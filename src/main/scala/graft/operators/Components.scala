@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a pair relation — the step between near-dup
   * PAIRS (q21/q31/q39/q46 output) and a deduplicated corpus: pairs form
@@ -20,24 +24,29 @@ import org.apache.spark.sql.functions._
   * unconverged labels (the pre-round-8 behavior at maxIter) is a wrong
   * clustering, not a slow one.
   *
-  * Scale shape: each round is a bounded number of shuffles keyed on node
-  * id, driven by ONE action — the convergence changed-count, which also
-  * materializes the round's LAZY localCheckpoint (O(1) driver state;
-  * measured on a 65-node chain: 64 AQE stage-jobs total vs 72 when the
-  * checkpoint was eager and the count a second action per round — the
-  * ConnectedComponentsSpec job-accounting test pins this). Lazy-vs-eager
-  * wall-clock was A/B'd interleaved in one JVM (tools/CcAb, round 10,
-  * q62+q63 at sf0.1, 5 reps each, arms alternated within each rep so
-  * drift hits both equally): lazy 4.70 s median / 4.09 s min vs eager
-  * 4.56 s / 3.96 s — statistically indistinguishable (~3% apart with
-  * ~40% within-arm spread as JIT warms), and BOTH arms sit at round 8's
-  * ~4.8 s level, so round 9's recorded q62+q63 7.96 s was thermal
-  * drift, not the refactor. Lazy is kept: equal wall-clock, strictly
-  * fewer scheduler jobs (64 vs 72 on the 65-node chain). Lineage is
-  * truncated per round with localCheckpoint — the jump's self-join
-  * doubles the LOGICAL plan otherwise and the analyzer, not the
-  * executors, becomes the bottleneck (measured: minutes per round by
-  * round ~15 with persist alone).
+  * Plan shape (GraphX's layout, Gonzalez et al., OSDI 2014): the adjacency
+  * is partitioned ONCE. The non-null edges are symmetrized, hash-partitioned
+  * by node id over the session's shuffle width, and each partition becomes
+  * one CSR [[Block]] — sorted distinct node ids, offsets, deduplicated
+  * neighbours — persisted for the run. Vertex state is one label array per
+  * partition, aligned index-for-index with its block, so a round combines
+  * state and adjacency with `zipPartitions` and the edges never shuffle
+  * again. A round is ONE Spark job of four stages: labels travel to
+  * neighbours (`reduceByKey(min)`, combined map-side); the pointer jump
+  * asks each candidate label's owning partition for that label's own label
+  * and gets the answer back by binary search in the owning block; the
+  * changed count — the round's only action — also materializes the round's
+  * lazy `localCheckpoint`, which cuts the lineage so round k's plan does
+  * not carry rounds 1..k-1. A 120-node chain runs 7 rounds in 7 jobs
+  * (ConnectedComponentsSpec pins jobs ≤ rounds + 1).
+  *
+  * Why not DataFrames: the same round written as joins and aggregates
+  * (through round 22) is correct, but under AQE every exchange and
+  * broadcast becomes its own stage job — ~9 jobs per round, 64 for the
+  * 7 rounds of a 120-node chain — and every join re-shuffles the edge set
+  * it already partitioned last round. SCALE.md
+  * §"Connected components: aligned blocks vs the DataFrame loop" has the
+  * interleaved A/B and the round-growth table.
   *
   * Determinism: min() over labels is order-independent — the fixpoint
   * (every node labeled with its component's minimum id) is the same
@@ -46,76 +55,198 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Checkpoint-eagerness knob for the round-10 A/B (tools/CcAb): lazy
-    * (false) makes the convergence count the round's single action; eager
-    * (true) adds a materialization job per round. Flipped only by the
-    * measurement tool — production callers use the default.
-    */
-  @volatile private[graft] var eagerCheckpoint = false
+  private val Integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
 
-  /** Components of the undirected graph given by `edges` (cols `a`, `b`).
-    * Returns (id, component) where component = min node id reachable.
+  /** One partition's slice of the symmetrized adjacency in CSR form: the
+    * neighbours of `ids(i)` are `nbrs(offsets(i) until offsets(i + 1))`.
+    */
+  private final case class Block(ids: Array[Long], offsets: Array[Int],
+      nbrs: Array[Long]) {
+    def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+  }
+
+  /** One partition's labels, aligned with its block's `ids` (the ids ride
+    * along so the final labels outlive the unpersisted blocks), plus how
+    * many of them the round that produced them moved.
+    */
+  private final case class Labels(ids: Array[Long], labels: Array[Long],
+      changed: Long)
+
+  /** Components of the undirected graph given by `edges` (cols `a`, `b`,
+    * integral node ids). Edges with a null endpoint are ignored. Returns
+    * (id, component) where component = min node id reachable.
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame =
     connectedComponentsInstrumented(edges, maxRounds)._1
 
-  /** Instrumented twin for the scale probe (tools/CcProbe) and specs: the
-    * same single implementation, also returning per-round (changedCount,
-    * wallMillis) so rounds-to-converge vs graph scale is measurable
-    * instead of asserted — the O(log diameter) claim is a SCALE.md row.
+  /** Instrumented twin for specs and scale measurements: the same single
+    * implementation, also returning per-round (changedCount, wallMillis)
+    * so rounds-to-converge vs graph scale is measurable instead of
+    * asserted — the O(log diameter) claim is a SCALE.md row.
     */
   private[graft] def connectedComponentsInstrumented(edges: DataFrame,
       maxRounds: Int = 50): (DataFrame, Seq[(Long, Long)]) = {
-    import org.apache.spark.storage.StorageLevel
-    val roundStats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(edges.select(col("b").as("src"), col("a").as("dst")))
-      .distinct()
+    val spark = edges.sparkSession
+    val a = edges.schema("a")
+    val b = edges.schema("b")
+    require(Seq(a, b).forall(f => Integral.contains(f.dataType)),
+      s"connectedComponents needs integral node ids, got ${a.dataType}/${b.dataType}")
+    // the (id, component) schema the DataFrame formulation produced: both
+    // columns come from the union of `a` and `b`
+    val idType = Seq(a.dataType, b.dataType).maxBy(_.defaultSize)
+    val nullable = a.nullable || b.nullable
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val pairs = edges
+      .select(col("a").cast(LongType), col("b").cast(LongType))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+      .queryExecution.toRdd
+      .flatMap { r =>
+        val (x, y) = (r.getLong(0), r.getLong(1))
+        Iterator((x, y), (y, x))
+      }
+    val blocks = pairs.partitionBy(part)
+      .mapPartitions(it => Iterator(buildBlock(it)), preservesPartitioning = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(eager = eagerCheckpoint) // lazy: materializes inside round 1's job
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      rounds += 1
-      val roundStart = System.nanoTime()
-      require(rounds <= maxRounds,
-        s"connectedComponents did not converge in $maxRounds rounds")
-      // min neighbour label per node (every node has >=1 edge by construction)
-      val neighborMin = sym
-        .join(labels.select(col("id").as("dst"), col("component").as("nc")),
-          "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("nc")).as("nmin"))
-      // the round's OLD label rides along so the convergence check below
-      // is a filter on the checkpointed rows, not another join+shuffle
-      val hop = labels
-        .join(neighborMin, "id")
-        .select(col("id"), col("component").as("old"),
-          least(col("component"), col("nmin")).as("component"))
-      // pointer jump: labels only ever decrease toward the component
-      // minimum, so relabeling through lbl(lbl) preserves the fixpoint.
-      // hop appears twice in this plan and is recomputed rather than
-      // checkpointed — two cheap joins beat an extra materialization
-      // barrier per round.
-      val next = hop.as("h")
-        .join(hop.select(col("id").as("jid"), col("component").as("jc")).as("j"),
-          col("h.component") === col("jid"), "left")
-        .select(col("h.id").as("id"), col("h.old").as("old"),
-          least(col("h.component"), coalesce(col("jc"), col("h.component")))
-            .as("component"))
-        // LAZY checkpoint: the convergence count below is the round's ONE
-        // action — computing it materializes every partition of the
-        // checkpointed RDD (count scans all rows), so the round needs no
-        // separate eager-materialization job. Lineage still truncates.
-        .localCheckpoint(eager = eagerCheckpoint)
-      changed = next.filter(col("component") =!= col("old")).count()
-      roundStats += ((changed, (System.nanoTime() - roundStart) / 1000000L))
-      labels = next.select("id", "component")
+    var labels: RDD[Labels] =
+      blocks.mapPartitions(_.map(bl => Labels(bl.ids, bl.ids, 0L)))
+    val roundStats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var converged = false
+    try {
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0) {
+        rounds += 1
+        val roundStart = System.nanoTime()
+        require(rounds <= maxRounds,
+          s"connectedComponents did not converge in $maxRounds rounds")
+        val prev = labels
+        labels = round(blocks, prev, part)
+        labels.localCheckpoint()
+        changed = labels.map(_.changed).fold(0L)(_ + _)
+        prev.unpersist(blocking = false) // the checkpoint cut the lineage to it
+        roundStats += ((changed, (System.nanoTime() - roundStart) / 1000000L))
+      }
+      converged = true
+    } finally {
+      blocks.unpersist(blocking = false)
+      if (!converged) labels.unpersist(blocking = false)
     }
-    sym.unpersist(blocking = false)
-    (labels.select("id", "component"), roundStats.toSeq)
+
+    val rows = labels.flatMap(l =>
+      l.ids.indices.iterator.map(i => Row(l.ids(i), l.labels(i))))
+    val out = spark.createDataFrame(rows, StructType(Seq(
+      StructField("id", LongType, nullable),
+      StructField("component", LongType, nullable))))
+    val typed =
+      if (idType == LongType) out
+      else out.select(col("id").cast(idType).as("id"),
+        col("component").cast(idType).as("component"))
+    (typed, roundStats.toSeq)
+  }
+
+  /** One round — min over neighbour labels, then the pointer jump — as a
+    * lazy RDD whose single action is the caller's changed count.
+    */
+  private def round(blocks: RDD[Block], labels: RDD[Labels],
+      part: HashPartitioner): RDD[Labels] = {
+    // every node sends its label to each neighbour; graphs are symmetric,
+    // so the minimum a node receives is the min over its neighbours
+    val nmin = blocks.zipPartitions(labels) { (bs, ls) =>
+      val bl = bs.next(); val l = ls.next()
+      bl.ids.indices.iterator.flatMap { i =>
+        val lab = l.labels(i)
+        (bl.offsets(i) until bl.offsets(i + 1)).iterator.map(j => (bl.nbrs(j), lab))
+      }
+    }.reduceByKey(part, math.min(_, _))
+    // hop = min(own label, neighbour minimum); the edges are symmetric, so
+    // every message lands on a node of the receiving block. Each stage
+    // below recomputes hop from the shuffle output it reads rather than
+    // persisting it, so a round caches nothing but its checkpoint.
+    val hop = blocks.zipPartitions(labels, nmin) { (bs, ls, ms) =>
+      val bl = bs.next()
+      val h = ls.next().labels.clone()
+      ms.foreach { case (u, m) =>
+        val i = bl.indexOf(u)
+        if (m < h(i)) h(i) = m
+      }
+      Iterator((bl, h))
+    }
+    // pointer jump, ask: each partition asks once per distinct candidate
+    // label c (not its own node's id) for hop(c), keyed to c's owner
+    val asks = hop.mapPartitionsWithIndex { (p, it) =>
+      val (bl, h) = it.next()
+      candidates(bl, h).iterator.map(c => (c, p))
+    }.partitionBy(part)
+    // answer: the owner looks c up in its block; keyed by the asking
+    // partition index p, which HashPartitioner sends to partition p
+    val answers = hop.zipPartitions(asks) { (hs, as) =>
+      val (bl, h) = hs.next()
+      as.map { case (c, p) => (p, (c, h(bl.indexOf(c)))) }
+    }.partitionBy(part)
+    hop.zipPartitions(labels, answers) { (hs, ls, as) =>
+      val (bl, h) = hs.next()
+      val old = ls.next().labels
+      val cs = candidates(bl, h)
+      val hc = new Array[Long](cs.length)
+      as.foreach { case (_, (c, v)) => hc(java.util.Arrays.binarySearch(cs, c)) = v }
+      var changed = 0L
+      val next = Array.tabulate(h.length) { i =>
+        val c = h(i)
+        val v =
+          if (c == bl.ids(i)) c
+          else math.min(c, hc(java.util.Arrays.binarySearch(cs, c)))
+        if (v != old(i)) changed += 1
+        v
+      }
+      Iterator(Labels(bl.ids, next, changed))
+    }
+  }
+
+  /** The sorted distinct labels in `h` that are not their own node's id —
+    * the pointer jump's questions for one partition.
+    */
+  private def candidates(bl: Block, h: Array[Long]): Array[Long] =
+    sortedDistinct(h.indices.iterator.filter(i => h(i) != bl.ids(i)).map(h).toArray)
+
+  /** Sorts `xs` in place and returns its distinct values. */
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var n = 0
+    var i = 0
+    while (i < xs.length) {
+      if (n == 0 || xs(i) != xs(n - 1)) { xs(n) = xs(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(xs, n)
+  }
+
+  /** CSR block of one partition's (src, dst) pairs: counting sort by src
+    * into `ids` order, then each neighbour run sorted and deduplicated.
+    */
+  private def buildBlock(pairs: Iterator[(Long, Long)]): Block = {
+    val src = Array.newBuilder[Long]
+    val dst = Array.newBuilder[Long]
+    pairs.foreach { case (x, y) => src += x; dst += y }
+    val s = src.result()
+    val d = dst.result()
+    val uniq = sortedDistinct(s.clone())
+    val start = new Array[Int](uniq.length + 1)
+    val slot = s.map(x => java.util.Arrays.binarySearch(uniq, x))
+    slot.foreach(k => start(k + 1) += 1)
+    for (k <- uniq.indices) start(k + 1) += start(k)
+    val cursor = start.clone()
+    val nbrs = new Array[Long](s.length)
+    for (e <- s.indices) { nbrs(cursor(slot(e))) = d(e); cursor(slot(e)) += 1 }
+    val offsets = new Array[Int](uniq.length + 1)
+    var w = 0
+    for (k <- uniq.indices) {
+      java.util.Arrays.sort(nbrs, start(k), start(k + 1))
+      offsets(k) = w
+      for (j <- start(k) until start(k + 1))
+        if (w == offsets(k) || nbrs(j) != nbrs(w - 1)) { nbrs(w) = nbrs(j); w += 1 }
+    }
+    offsets(uniq.length) = w
+    Block(uniq, offsets, java.util.Arrays.copyOf(nbrs, w))
   }
 
   /** Canonicalize a document set against a near-dup pair relation:

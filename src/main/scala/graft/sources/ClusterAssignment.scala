@@ -50,6 +50,7 @@ object ClusterAssignment {
   /** Bump when [[graft.operators.Components.connectedComponents]] itself
     * changes behavior (the min-label CC algorithm).
     */
+  // cc1 across plan rewrites: the fixpoint is unique, labels bit-identical
   private val Algo = "cc1"
 
   /** Structural version stamp: the CC algo version, the strong-slice

@@ -9,7 +9,7 @@ import graft.{Caches, SparkEntry}
   * itself drifted 1.9× between the rounds, so the hypothesis is ambient
   * box load, not a plan regression.
   *
-  * Design (the CcAb discipline): interleave the suspect queries with a
+  * Design: interleave the suspect queries with a
   * fixed CONTROL (q13 scalar agg — 2 jobs, plan untouched for many
   * rounds) within one JVM, several reps, measuring each exactly like
   * Bench (noop write, cache clear between queries). If q75/q76 track the

@@ -7,7 +7,7 @@ import graft.queries.VectorOps
 /** Round-10 A/B: does q53's per-query top-10 via the bounded
   * topk_by_score aggregate (map-side partials, ≤10 rows/query/partition
   * at the exchange) beat the row_number window twin (full candidate
-  * shuffle + sort, corpus×8 on the exact arm)? Same design as [[CcAb]]/
+  * shuffle + sort, corpus×8 on the exact arm)? Same design as
   * [[Q53Ab]]: ALTERNATE the arms within one JVM so thermal drift hits
   * both equally; measurement identical to Bench (noop write,
   * Caches.clearAll between runs). Not registered in the driver contract.

@@ -42,40 +42,84 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got == Map(3L -> 3L, 5L -> 3L, 9L -> 3L))
   }
 
-  test("convergence count rides the round's materialization — no extra action") {
-    // The invariant is RELATIVE, not an absolute job total (a hardcoded
-    // AQE job count couples the test to Spark's current stage-to-job
-    // decomposition): the lazy checkpoint must launch strictly fewer jobs
-    // than the eager form on the same graph under the same AQE, because
-    // eager adds a materialization action per round that lazy folds into
-    // the convergence count.
+  test("one Spark job per round: the changed count is the round's only action") {
+    // the count also materializes the round's lazy localCheckpoint, and
+    // the adjacency blocks build inside round 1's job — so a run costs
+    // its rounds and nothing else (the DataFrame loop this replaced took
+    // ~9 AQE stage-jobs per round on the same chain)
     val sc = spark.sparkContext
     import spark.implicits._
-    val chain = (0L until 64L).map(i => (i, i + 1))
-    def jobsFor(group: String)(body: => Unit): Int = {
-      sc.setJobGroup(group, "cc job accounting", interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-      // the statusTracker fills asynchronously — poll until stable
-      def jobs: Int = sc.statusTracker.getJobIdsForGroup(group).length
-      var last = -1; var now = jobs
-      while (now != last) { Thread.sleep(200); last = now; now = jobs }
-      now
-    }
-    val lazyJobs = jobsFor("cc-lazy") {
-      Components.connectedComponents(chain.toDF("a", "b"))
-    }
-    Components.eagerCheckpoint = true
-    val eagerJobs =
-      try jobsFor("cc-eager") {
-        Components.connectedComponents(chain.toDF("a", "b"))
-      } finally Components.eagerCheckpoint = false
-    assert(lazyJobs > 0)
-    assert(lazyJobs < eagerJobs,
-      s"lazy checkpointing must save the per-round materialization action: " +
-        s"lazy=$lazyJobs jobs vs eager=$eagerJobs")
+    val chain = (0L until 64L).map(i => (i, i + 1)).toDF("a", "b")
+    sc.setJobGroup("cc-rounds", "cc job accounting", interruptOnCancel = false)
+    val rounds =
+      try Components.connectedComponentsInstrumented(chain)._2.length
+      finally sc.clearJobGroup()
+    // the statusTracker fills asynchronously — poll until stable
+    def count: Int = sc.statusTracker.getJobIdsForGroup("cc-rounds").length
+    var last = -1; var jobs = count
+    while (jobs != last) { Thread.sleep(200); last = jobs; jobs = count }
+    assert(jobs > 0)
+    assert(jobs <= rounds + 1, s"$jobs jobs for $rounds rounds")
     // and the round count itself is the log-diameter invariant, directly:
     // a 65-node chain needs ~log2(64) pointer-jump rounds + 1 stable round
-    val (_, stats) = Components.connectedComponentsInstrumented(chain.toDF("a", "b"))
-    assert(stats.length <= 8, s"expected <= 8 rounds on a 65-node chain, got ${stats.length}")
+    assert(rounds <= 8, s"expected <= 8 rounds on a 65-node chain, got $rounds")
+  }
+
+  test("an exhausted round budget fails loudly and leaks no persisted RDD") {
+    import spark.implicits._
+    val chain = (100L until 219L).map(i => (i, i + 1)).toDF("a", "b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException] {
+      Components.connectedComponents(chain, maxRounds = 2)
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  /** Driver-side union-find: the component minimum of every node that
+    * appears in a non-null edge.
+    */
+  private def unionFind(edges: Seq[(Option[Long], Option[Long])]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((Some(a), Some(b)) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      // the smaller root wins, so every root is its set's minimum
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  test("labels equal a driver-side union-find on random graphs with messy edges") {
+    import spark.implicits._
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val n = 40 + rnd.nextInt(200)
+      def node(): Option[Long] =
+        if (rnd.nextInt(20) == 0) None else Some(rnd.nextInt(n).toLong)
+      val base = Seq.fill(n * 3 / 4)((node(), node()))
+      // duplicates, reversals and self-loops of edges already drawn
+      val edges = base ++ base.take(10) ++ base.takeRight(10).map(_.swap) ++
+        base.take(5).map { case (a, _) => (a, a) }
+      val expected = unionFind(edges).toSeq.sorted
+      val got = Components.connectedComponents(
+          rnd.shuffle(edges).map { case (a, b) =>
+            (a.map(Long.box).orNull, b.map(Long.box).orNull)
+          }.toDF("a", "b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+      assert(got == expected, s"seed $seed")
+    }
+  }
+
+  test("degenerate inputs: an empty edge frame and a single edge") {
+    import spark.implicits._
+    val (empty, stats) = Components.connectedComponentsInstrumented(
+      Seq.empty[(Long, Long)].toDF("a", "b"))
+    assert(empty.collect().isEmpty)
+    assert(stats.map(_._1) == Seq(0L), s"one round, nothing changed: $stats")
+    assert(cc(Seq((7L, 3L))) == Map(3L -> 3L, 7L -> 3L))
   }
 }
