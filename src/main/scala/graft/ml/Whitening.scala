@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.FloatType
   *     same broadcast-as-literal shape as the softmax head — so it runs
   *     unchanged over batch or streaming frames.
   *
-  * Measured payoff (tools/WhitenPqAb, round 15, both warm and
+  * Measured payoff (SCALE.md §"Round 15", both warm and
   * RETRAINED sub-codebooks): whitening before PQ is NOT a systematic
   * win on this corpus — with retrained codebooks in both spaces,
   * sf0.01 whitened-trained wins (0.8625 vs 0.6875 recall@10) but

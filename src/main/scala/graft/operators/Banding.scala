@@ -11,8 +11,8 @@ import org.apache.spark.sql.graft.VectorExpressions
   * the policy below (floored at the historical 4×4 for tiny corpora);
   * declaring a geometry pins an operating point instead.
   *
-  * Candidate volume math (measured by tools/SlopeProbe, recorded in
-  * SCALE.md): pairs sharing a band key number ~ `bands · 2^-bits · N²/2`
+  * Candidate volume math (measured and recorded in SCALE.md §"Measured
+  * candidate slope"): pairs sharing a band key number ~ `bands · 2^-bits · N²/2`
   * for unrelated vectors — banding on a FIXED bit budget is Θ(N²) with a
   * small constant, not sub-quadratic. Keeping candidates ~linear as the
   * corpus grows requires the per-band bit depth to grow with it:

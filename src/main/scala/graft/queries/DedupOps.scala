@@ -13,13 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  /** q67/span_dedup measurement knob (tools/SpanPersistAb ONLY): persist
-    * the twice-consumed `occ` relation instead of recomputing it. Default
-    * false — recompute is the production answer (see spanDeduped's scaladoc
-    * and the §7b receipt in OPTIMIZATION_r22.md).
-    */
-  @volatile private[graft] var q67PersistOcc = false
-
   private val P = 1000000007L
   /** Fixed MinHash family: 16 odd multipliers/offsets (deterministic, spliced
     * into both engines as literals).
@@ -435,8 +428,8 @@ object DedupOps {
     // measured A/B (solo sf0.1, 3 runs) put the persist within this box's
     // noise (2.13 → 1.95 s). The residual vs the oracle is the fixed
     // multi-job floor, not recompute. r22 re-ran the A/B at 10× corpus in
-    // ONE JVM (tools/SpanPersistAb, q67PersistOcc knob): see
-    // OPTIMIZATION_r22.md §7b for the scale-shaped receipt.
+    // ONE JVM and recompute held: OPTIMIZATION_r22.md §7b has the
+    // scale-shaped receipt.
     // Span fingerprints come from the FUSED k-gram kernel (r21): the
     // slice+concat_ws+rolling_hash form materialized the 8-token string
     // and re-hashed ~8 tokens per span; ngram_hashes hashes each token
@@ -447,18 +440,10 @@ object DedupOps {
     // posexplode's 0-based p maps to the 1-based span start i = p + 1;
     // docs under k tokens emit no windows (kernel contract), exactly the
     // old size(w) >= k guard.
-    val occ0 = t
+    val occ = t
       .select(col("doc_id"), posexplode(org.apache.spark.sql.graft
         .TextExpressions.ngram_hashes(col("w"), k)).as(Seq("p", "fp")))
       .select(col("doc_id"), (col("p") + 1).as("i"), col("fp"))
-    // measurement knob ONLY (tools/SpanPersistAb): persist occ to price the
-    // recompute-vs-materialize trade at larger corpora in one JVM. Default
-    // off — the production answer. Not a bare-scan-canonicalizable frame
-    // (repartition → split → posexplode), so the r16 cache-substitution
-    // hazard does not apply; Caches.clearAll releases it after each run.
-    val occ = if (q67PersistOcc)
-      occ0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else occ0
     val dup = occ.groupBy("fp")
       .agg(count(lit(1)).as("c"),
         min(struct(col("doc_id"), col("i"))).as("keep"))
@@ -1053,7 +1038,7 @@ object DedupOps {
   private[graft] def calibSigMod(n: Long): Long =
     math.max(1L, (n + CalibSigTarget - 1) / CalibSigTarget)
 
-  // ---- q107's pipeline stages, factored for tools/Q107Profile ----------
+  // ---- q107's pipeline stages (profiled in OPTIMIZATION_r22.md §8) -----
   // One implementation: the query fn composes exactly these (r22 refactor,
   // plan byte-identical — the stages were previously inline vals).
 

@@ -286,7 +286,7 @@ object Relational {
     * map-side-dedups its own column and shuffles only that column's
     * partial distincts; the extra scans are column-pruned parquet reads,
     * and scans are the cheap currency at 100 TB — shuffles are not.
-    * Re-measured r13 (tools/Q10Ab, interleaved 5-rep): split 0.82 s
+    * Re-measured r13 (interleaved 5-rep A/B, OPTIMIZATION_r21.md): split 0.82 s
     * median vs expand 1.10 s — the r12 call stands. (Expand shows LOWER
     * aggregate task time, 1.2 vs 2.4 s, but its single wide shuffle
     * stage serializes worse than four small pipelined jobs on wall —

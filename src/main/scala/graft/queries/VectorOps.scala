@@ -19,26 +19,6 @@ import org.apache.spark.sql.types._
 object VectorOps {
 
 
-  /** q53 top-10 ranking form: true = bounded topk_by_score aggregate
-    * (map-side partials, ≤10 rows per query per partition reach the
-    * exchange), false = the row_number window twin (full candidate
-    * shuffle + sort). Same rows either way — (dot DESC, vec_id ASC)
-    * selection; the knob exists for tools/TopKAb's interleaved A/B.
-    * Measured (r10, 5 interleaved reps, sf0.1): pairwise deltas sum to
-    * -0.05 s — indistinguishable at this SF. Agg kept as default for
-    * the scale path: the exchange carries O(queries·k·partitions) rows
-    * instead of the corpus×8 candidate stream.
-    */
-  @volatile private[graft] var topKAggTop10 = true
-
-  /** q53 arm assembly: `true` (default) fuses the arms into two tagged-union
-    * actions (one for the direct arms, one for the PQ re-rank pair — 28 → ~13
-    * jobs); `false` keeps the per-arm Future-per-collect assembly. Same rows
-    * either way (groups never mix methods); the knob exists for
-    * tools/Q53Ab's interleaved A/B.
-    */
-  @volatile private[graft] var q53FusedArms = true
-
   private def fdot(a: String, b: String) =
     org.apache.spark.sql.graft.VectorExpressions.float_dot(col(a), col(b))
   private def fdot2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -145,8 +125,9 @@ object VectorOps {
     * of buckets, vs IVF's nprobe-2 = 20% read at recall 0.33–0.45 (q53 is
     * the meter for exactly this trade).
     *
-    * MEASURED NEGATIVE RESULT (round 8, tools/LshSweep): growing the plane
-    * family at a fixed probe budget does NOT buy recall. Because the probe
+    * MEASURED NEGATIVE RESULT (round-8 plane/probe sweep, SCALE.md
+    * §"Sub-quadratic similarity"): growing the plane family at a fixed
+    * probe budget does NOT buy recall. Because the probe
     * set enumerates every sign pattern of the probed bits, a corpus vector
     * is a candidate iff it agrees with the query on all PINNED bits, so
     * recall/read are functions of the pinned count almost alone:
@@ -178,10 +159,6 @@ object VectorOps {
     * bucket derivation uses, so driver-side sign/margin math starts from
     * bit-identical doubles.
     */
-  // tools/Q34Probe accessors (dev measurement only)
-  private[graft] def planeDotColsProbe: Seq[org.apache.spark.sql.Column] = planeDotCols
-  private[graft] def probeBucketsProbe(planeDots: Seq[Double]): Seq[Long] = probeBuckets(planeDots)
-
   private def planeDotCols: Seq[org.apache.spark.sql.Column] =
     planes.map(p => fdot2(col("embedding"), lit(p.map(_.toFloat).toArray)))
 
@@ -259,7 +236,8 @@ object VectorOps {
   // ---- scale-derived band geometry (q28 / q46 / q86) -------------------
   //
   // Banding on a FIXED bit budget is Θ(N²) with a small constant (the
-  // operators/Banding scaladoc's candidate math, measured by SlopeProbe):
+  // operators/Banding scaladoc's candidate math, measured in SCALE.md
+  // §"Measured candidate slope"):
   // candidates ~ bands · 2^-bits · N²/2. The banded queries therefore
   // derive the per-band bit depth FROM THE CORPUS COUNT so each (band,
   // key) bucket holds ~BandTargetBucket vectors and per-bucket pair
@@ -445,8 +423,9 @@ object VectorOps {
     * arrive); here the access pattern is bucket probes, so bucket is the
     * partition key.
     *
-    * BENCH-RATIO HONESTY (r18 audit, tools/Q34Probe): q34's ~6× per-query
-    * ratio at sf0.1 is a measured negative, not a fixable plan defect.
+    * BENCH-RATIO HONESTY (SCALE.md, "Round-18 q34 ratio audit"): q34's
+    * ~6× per-query ratio at sf0.1 is a measured negative, not a fixable
+    * plan defect.
     * The 2 jobs are already minimal (one pushed single-row query fetch,
     * one probed scan); planning the 16384-value partition IN-filter costs
     * ~0.05 s; the remaining ~0.3 s warm is the probed read opening ~500
@@ -762,8 +741,8 @@ object VectorOps {
     * The rows also tell the structural story on this corpus: IVF's
     * learned cells track the label clusters the data actually has (recall
     * ≈0.33–0.45 reading nprobe/k = 20%), the `lsh` arm at the promoted
-    * q34 default (probed 14 / pinned 2 — the round-8 tools/LshSweep
-    * -measured dominant point) reaches ≈0.56–0.63 reading 25–28%, beating
+    * q34 default (probed 14 / pinned 2 — the round-8 sweep's measured
+    * dominant point) reaches ≈0.56–0.63 reading 25–28%, beating
     * IVF on recall-per-read, and the `lsh12` economy point (probed 12 /
     * pinned 4) reaches ≈0.24–0.29 reading ~8%. The meter is what measured
     * the round-6 hamming-2 scheme at 0.04 and justified replacing it, and
@@ -912,7 +891,6 @@ object VectorOps {
        |FROM hits
        |ORDER BY method, qid""".stripMargin) { (s, dir) =>
     import graft.ml.KMeans
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables(s, dir, "embeddings")
     val corpus = emb.filter(col("vec_id") >= RecallQueries)
     // ONE pushed-down scan collects the 8 query rows' embeddings AND their
@@ -927,55 +905,6 @@ object VectorOps {
       .collect()
     val qvs = qrows.map(r => (r.getLong(0), r.getSeq[Float](1)))
     val queries = s.createDataFrame(qvs.toSeq).toDF("qid", "qv")
-    // per-query top-10 via the bounded topk_by_score aggregate: map-side
-    // partials reduce each partition to ≤10 rows per query BEFORE the
-    // exchange, where the window form shuffles and sorts every candidate
-    // row (the exact arm's is corpus×8). Selection order (dot DESC,
-    // vec_id ASC) is identical to the window's — same rows out. Round 13:
-    // the SAME aggregation also emits count(*), so each arm's candidate
-    // frame is scanned ONCE for both the rank and the read_frac meter
-    // (round 12 ran every arm's corpus pass twice — a rank pass and a
-    // count pass). The window twin stays behind the knob for the
-    // interleaved A/B (tools/TopKAb); flip only by the measurement tool.
-    def topkCount(cands: org.apache.spark.sql.DataFrame) =
-      cands.groupBy("qid")
-        .agg(org.apache.spark.sql.graft.TopK
-          .topk_by_score(fdot("embedding", "qv"), col("vec_id"), 10).as("tk"),
-          count(lit(1)).as("n_scanned"))
-    def top10(cands: org.apache.spark.sql.DataFrame) =
-      if (topKAggTop10) {
-        topkCount(cands)
-          .select(col("qid"), explode(col("tk")).as("h"))
-          .select(col("qid"), col("h.id").as("vec_id"))
-      } else {
-        val w = Window.partitionBy("qid")
-          .orderBy(fdot("embedding", "qv").desc, col("vec_id"))
-        cands.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10)
-          .select("qid", "vec_id")
-      }
-    // ROUND-13 ASSEMBLY: each arm reduces to ≤|queries| rows of
-    // (qid, top-10 ids, n_scanned) — O(methods·queries·k) driver metadata,
-    // inside the SURVEY §7 collect bound — so the overlap/recall/read_frac
-    // arithmetic is driver math over ~400 values, and the distributed work
-    // is EXACTLY six corpus passes (exact, lsh, lsh12, ivf, pq, pqt). Round 12
-    // assembled the same 32 rows distributively: ~25 extra 32-task stages
-    // (arm unions, overlap joins, scan joins, orderBy range sampling) that
-    // cost more wall than the corpus scans themselves (JobCountProbe:
-    // 38 jobs / 900 tasks for a 32-row answer). In the agg path the exact
-    // comb's n_scanned already equals |corpus|, so no corpus.count() job.
-    def armSets(cands: org.apache.spark.sql.DataFrame)
-        : (Map[Long, Seq[Long]], Map[Long, Long]) =
-      if (topKAggTop10) {
-        val rows = topkCount(cands).collect()
-        (rows.map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
-            .map(_.getAs[Long]("id"))).toMap,
-          rows.map(r => r.getLong(0) -> r.getLong(2)).toMap)
-      } else
-        (top10(cands).collect().groupBy(_.getLong(0)).view
-            .mapValues(_.map(_.getLong(1)).toSeq).toMap,
-          cands.groupBy("qid").agg(count(lit(1)).as("n_scanned")).collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap)
     // q34 arm: margin-directed multiprobe sign-LSH (distinct probe buckets
     // per query ⇒ a corpus vector matches at most one probe row per query).
     // Probe sets come from the same driver derivation as q34 — one tiny
@@ -1037,31 +966,6 @@ object VectorOps {
     val adcCol = PQ.adcCol(adcMaps, col("qid"), sub => col(s"code_$sub"))
     val pqRanked = codedC.crossJoin(broadcast(qidDf))
       .withColumn("adc", adcCol)
-    val pqCand =
-      if (topKAggTop10) {
-        // bounded top-100 by ADC — map-side partials reduce each partition
-        // to ≤100 rows per query before the exchange (the window twin
-        // shuffles and sorts the full corpus×8 candidate stream) — then
-        // ONE map-only rejoin of the ≤800 selected ids recovers the
-        // re-rank vectors; selection order (adc DESC, vec_id ASC) is the
-        // window's. This is also the production PQ shape: the ADC pass
-        // touches codes only, full vectors are read for the re-rank set.
-        val top100 = pqRanked.groupBy("qid")
-          .agg(org.apache.spark.sql.graft.TopK
-            .topk_by_score(col("adc"), col("vec_id"), 100).as("tk"))
-          .select(col("qid"), explode(col("tk")).as("h"))
-          .select(col("qid"), col("h.id").as("vec_id"))
-        corpus.select("vec_id", "embedding").join(broadcast(top100), "vec_id")
-          .select("qid", "vec_id", "embedding")
-      } else {
-        val wAdc = Window.partitionBy("qid").orderBy(col("adc").desc, col("vec_id"))
-        pqRanked.withColumn("rn", row_number().over(wAdc))
-          .filter(col("rn") <= 100)
-          .select("qid", "vec_id", "embedding")
-      }
-    // pq's full-vector read is the 100-row re-rank set, not the code-only
-    // ADC pass — read_frac meters what pays for exact dots, per the q58 doc
-    val pqCands = pqCand.join(broadcast(queries), "qid")
     // pqt arm: the same ADC + re-rank shape over the TRAINED per-subspace
     // sub-codebooks (PqCodebooks / q92) — metered next to the sliced-c0
     // `pq` arm so the retraining payoff the round-15 A/B measured is an
@@ -1078,128 +982,92 @@ object VectorOps {
     val adcColT = PQ.adcCol(adcMapsT, col("qid"), sub => col(s"code_$sub"))
     val pqtRanked = codedT.crossJoin(broadcast(qidDf))
       .withColumn("adc", adcColT)
-    val pqtCand =
-      if (topKAggTop10) {
-        val top100 = pqtRanked.groupBy("qid")
-          .agg(org.apache.spark.sql.graft.TopK
-            .topk_by_score(col("adc"), col("vec_id"), 100).as("tk"))
-          .select(col("qid"), explode(col("tk")).as("h"))
-          .select(col("qid"), col("h.id").as("vec_id"))
-        corpus.select("vec_id", "embedding").join(broadcast(top100), "vec_id")
-          .select("qid", "vec_id", "embedding")
-      } else {
-        val wAdc = Window.partitionBy("qid").orderBy(col("adc").desc, col("vec_id"))
-        pqtRanked.withColumn("rn", row_number().over(wAdc))
-          .filter(col("rn") <= 100)
-          .select("qid", "vec_id", "embedding")
-      }
-    val pqtCands = pqtCand.join(broadcast(queries), "qid")
-    // r22 (verdict item 3): in the aggregate mode the six arms FUSE into
-    // ONE action — each arm's candidate stream is tagged with its method
-    // name and unioned, so a single groupBy(method, qid) bounded-top-k
-    // aggregate reduces every arm map-side and ONE exchange + ONE collect
-    // replaces six concurrent collect jobs (28 jobs → 8; the r13 lesson —
-    // tiny-result assembly belongs in as few actions as possible — applied
-    // to the arms themselves). Grouping by (method, qid) instead of qid
-    // cannot change any arm's selection: groups never mix methods, and the
-    // per-group (score DESC, id ASC) order is the window form's. The six
-    // scans are still six scans (Spark does not share subtrees across
-    // union branches) but they now co-schedule inside one job, which is
-    // exactly what the Future-per-arm machinery existed to approximate.
-    // The window twin (topKAggTop10 = false, tools/TopKAb) and the
-    // q53FusedArms = false baseline keep the original per-arm assembly
-    // below.
-    val outRows = if (topKAggTop10 && q53FusedArms) {
-      def tagged(m: String, cands: org.apache.spark.sql.DataFrame) =
-        cands.select(lit(m).as("method"), col("qid"), col("vec_id"),
-          col("embedding"), col("qv"))
-      // the two ADC top-100 selections fuse the same way: one
-      // (method, qid)-grouped bounded aggregate over the tagged union of
-      // both coded scans, then ONE ≤1600-row broadcast rejoin recovers the
-      // re-rank vectors for both PQ arms
-      val coded100 = pqRanked
-        .select(lit("pq").as("method"), col("qid"), col("vec_id"), col("adc"))
-        .unionAll(pqtRanked
-          .select(lit("pqt").as("method"), col("qid"), col("vec_id"), col("adc")))
-        .groupBy("method", "qid")
-        .agg(org.apache.spark.sql.graft.TopK
-          .topk_by_score(col("adc"), col("vec_id"), 100).as("tk"))
-        .select(col("method"), col("qid"), explode(col("tk")).as("h"))
-        .select(col("method"), col("qid"), col("h.id").as("vec_id"))
-      val rerank = corpus.select("vec_id", "embedding")
-        .join(broadcast(coded100), "vec_id")
-        .join(broadcast(queries), "qid")
-        .select(col("method"), col("qid"), col("vec_id"),
-          col("embedding"), col("qv"))
-      def fusedTop10(all: org.apache.spark.sql.DataFrame) = all
-        .groupBy("method", "qid")
-        .agg(org.apache.spark.sql.graft.TopK
-          .topk_by_score(fdot("embedding", "qv"), col("vec_id"), 10).as("tk"),
-          count(lit(1)).as("n_scanned"))
-        .collect()
-      // TWO concurrent actions, not one: folding the re-rank branch into
-      // the direct union was measured SLOWER (1.33 → 1.65 s min isolated)
-      // because the union's map stage depends on the coded100 broadcast —
-      // the two ADC corpus scans would gate the exact/ivf/lsh scans
-      // instead of overlapping them
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val directF = Future(fusedTop10(
-        tagged("exact", corpus.crossJoin(broadcast(queries)))
-          .unionAll(tagged("ivf", ivfCands))
-          .unionAll(tagged("lsh", lshCands))
-          .unionAll(tagged("lsh12", lsh12Cands))))
-      val pqF = Future(fusedTop10(rerank))
-      val collected =
-        Await.result(directF, scala.concurrent.duration.Duration.Inf) ++
-          Await.result(pqF, scala.concurrent.duration.Duration.Inf)
-      val ids = collected.map(r => (r.getString(0), r.getLong(1)) ->
-        r.getSeq[org.apache.spark.sql.Row](2).map(_.getAs[Long]("id"))).toMap
-      val scans = collected.map(r =>
-        (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
-      val exactIds = ids.collect { case ((m, q), v) if m == "exact" => q -> v }
-      // the exact comb's n_scanned IS |corpus| — no corpus.count() job
-      val corpusN = scans.collect { case ((m, _), v) if m == "exact" => v }.head
-      // overlap/recall/read_frac are plain arithmetic over ≤400 driver
-      // values; the divisions are the same long→double IEEE ops the
-      // oracle's BIGINT divisions perform, so the compare stays bit-exact
-      Seq("ivf", "lsh", "lsh12", "pq", "pqt").flatMap { m =>
-        exactIds.keys.toSeq.sorted.map { qid =>
-          val overlap = exactIds(qid).toSet
-            .intersect(ids.getOrElse((m, qid), Nil).toSet).size.toLong
-          val scanned = scans.getOrElse((m, qid), 0L)
-          (m, qid, overlap, overlap.toDouble / 10.0,
-            scanned.toDouble / corpusN.toDouble)
-        }
-      }
-    } else {
-      // window-twin assembly (the measured A/B baseline): six concurrent
-      // per-arm collects — each arm's single wide stage leaves cores idle
-      // in its scheduling/collect tail, and the FIFO scheduler interleaves
-      // them on local[32] exactly like a multi-tenant cluster would
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val exactF = Future {
-        val (ids, scans) = armSets(corpus.crossJoin(broadcast(queries)))
-        val n = if (topKAggTop10) scans.values.headOption.getOrElse(0L)
-          else corpus.count()
-        (ids, n)
-      }
-      val armFs = Seq("ivf" -> ivfCands, "lsh" -> lshCands,
-        "lsh12" -> lsh12Cands, "pq" -> pqCands, "pqt" -> pqtCands)
-        .map { case (m, cands) => Future((m, armSets(cands))) }
-      val (exactIds, corpusN) =
-        Await.result(exactF, scala.concurrent.duration.Duration.Inf)
-      val armResults = armFs.map(f =>
-        Await.result(f, scala.concurrent.duration.Duration.Inf))
-      armResults.sortBy(_._1).flatMap { case (m, (ids, scans)) =>
-        exactIds.keys.toSeq.sorted.map { qid =>
-          val overlap =
-            exactIds(qid).toSet.intersect(ids.getOrElse(qid, Nil).toSet).size.toLong
-          val scanned = scans.getOrElse(qid, 0L)
-          (m, qid, overlap, overlap.toDouble / 10.0,
-            scanned.toDouble / corpusN.toDouble)
-        }
+    // ASSEMBLY: every arm reduces to ≤|queries| rows of (qid, top-10 ids,
+    // n_scanned) — O(methods·queries·k) driver metadata, inside the SURVEY
+    // §7 collect bound — so overlap/recall/read_frac is driver math over
+    // ~400 values and the distributed work is exactly six corpus passes
+    // (exact, lsh, lsh12, ivf, pq, pqt). Round 12 assembled its then
+    // 32-row answer distributively in 38 jobs / ~900 tasks (SCALE.md
+    // §"Storage layout", the q53 receipt). The arms' candidate streams
+    // are tagged with their method name and unioned, so ONE groupBy(method, qid)
+    // bounded top-k aggregate reduces them map-side — ≤k rows per group
+    // per partition reach the exchange, where a row_number window would
+    // shuffle and sort every candidate (the exact arm's is corpus×8).
+    // Groups never mix methods and the per-group (score DESC, id ASC)
+    // order is the window form's, so each arm selects exactly the rows the
+    // oracle's row_number does (TopKSpec pins the equivalence). The same
+    // aggregate emits count(*), so each arm's candidates are scanned once
+    // for both the rank and the read_frac meter. OPTIMIZATION_r22.md §4
+    // has the fused-vs-per-arm receipt (28 → 15 jobs).
+    def tagged(m: String, cands: org.apache.spark.sql.DataFrame) =
+      cands.select(lit(m).as("method"), col("qid"), col("vec_id"),
+        col("embedding"), col("qv"))
+    // the two ADC top-100 selections fuse the same way: one (method, qid)
+    // bounded aggregate over the tagged union of both coded scans, then
+    // ONE ≤1600-row broadcast rejoin recovers the re-rank vectors for both
+    // PQ arms — the production PQ shape: the ADC pass touches codes only,
+    // full vectors are read for the re-rank set. The pq arms' n_scanned is
+    // therefore the re-rank set, not the code-only pass: read_frac meters
+    // what pays for exact dots, per the q58 doc.
+    val coded100 = pqRanked
+      .select(lit("pq").as("method"), col("qid"), col("vec_id"), col("adc"))
+      .unionAll(pqtRanked
+        .select(lit("pqt").as("method"), col("qid"), col("vec_id"), col("adc")))
+      .groupBy("method", "qid")
+      .agg(org.apache.spark.sql.graft.TopK
+        .topk_by_score(col("adc"), col("vec_id"), 100).as("tk"))
+      .select(col("method"), col("qid"), explode(col("tk")).as("h"))
+      .select(col("method"), col("qid"), col("h.id").as("vec_id"))
+    val rerank = corpus.select("vec_id", "embedding")
+      .join(broadcast(coded100), "vec_id")
+      .join(broadcast(queries), "qid")
+      .select(col("method"), col("qid"), col("vec_id"),
+        col("embedding"), col("qv"))
+    def fusedTop10(all: org.apache.spark.sql.DataFrame) = all
+      .groupBy("method", "qid")
+      .agg(org.apache.spark.sql.graft.TopK
+        .topk_by_score(fdot("embedding", "qv"), col("vec_id"), 10).as("tk"),
+        count(lit(1)).as("n_scanned"))
+      .collect()
+    // TWO concurrent actions, not one: folding the re-rank branch into the
+    // direct union was measured SLOWER (1.33 → 1.65 s min isolated) because
+    // the union's map stage depends on the coded100 broadcast — the two ADC
+    // corpus scans would gate the exact/ivf/lsh scans instead of
+    // overlapping them. The re-rank action runs on a thread started HERE:
+    // a new thread inherits the caller's Spark local properties (job
+    // group, scheduler pool), which a pooled Future's worker does not, so
+    // group accounting and cancellation reach both actions.
+    val pqTask = new java.util.concurrent.FutureTask(() => fusedTop10(rerank))
+    val pqThread = new Thread(pqTask, "q53-pq-rerank")
+    pqThread.setDaemon(true)
+    pqThread.start()
+    val direct = fusedTop10(
+      tagged("exact", corpus.crossJoin(broadcast(queries)))
+        .unionAll(tagged("ivf", ivfCands))
+        .unionAll(tagged("lsh", lshCands))
+        .unionAll(tagged("lsh12", lsh12Cands)))
+    val collected = direct ++ (try pqTask.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
+    val ids = collected.map(r => (r.getString(0), r.getLong(1)) ->
+      r.getSeq[org.apache.spark.sql.Row](2).map(_.getAs[Long]("id"))).toMap
+    val scans = collected.map(r =>
+      (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
+    val exactIds = ids.collect { case ((m, q), v) if m == "exact" => q -> v }
+    // the exact comb's n_scanned IS |corpus| — no corpus.count() job. With
+    // no query rows there are no exact groups, no output rows and so no
+    // division by it.
+    val corpusN = scans.collect { case ((m, _), v) if m == "exact" => v }
+      .headOption.getOrElse(0L)
+    // overlap/recall/read_frac are plain arithmetic over ≤400 driver
+    // values; the divisions are the same long→double IEEE ops the
+    // oracle's BIGINT divisions perform, so the compare stays bit-exact
+    val outRows = Seq("ivf", "lsh", "lsh12", "pq", "pqt").flatMap { m =>
+      exactIds.keys.toSeq.sorted.map { qid =>
+        val overlap = exactIds(qid).toSet
+          .intersect(ids.getOrElse((m, qid), Nil).toSet).size.toLong
+        val scanned = scans.getOrElse((m, qid), 0L)
+        (m, qid, overlap, overlap.toDouble / 10.0,
+          scanned.toDouble / corpusN.toDouble)
       }
     }
     s.createDataFrame(outRows)
@@ -1807,7 +1675,7 @@ object VectorOps {
     * exact integer ratios. Re-run after any geometry change: a depth
     * that sheds candidates without holding recall fails HERE, not in
     * production. One row; the S-curve's other axis (candidate volume)
-    * is SlopeProbe's.
+    * is SCALE.md §"Measured candidate slope".
     */
   val q89BandRecall: QueryDef = QueryDef.sql(
     "q89_band_recall",

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * arm probe). Production ANN trains its quantizer at ingest and every
   * query loads the codebook; before this layout each of q42/q53/q58/q60
   * re-trained the same tables per execution (~0.4 s per table warm at
-  * sf0.1 — tools/Q53Probe), which at suite scale re-paid the most
+  * sf0.1 — SCALE.md §"Storage layout"), which at suite scale re-paid the most
   * expensive non-scan work four times per bench pass.
   *
   * The stored values are EXACTLY the tables the queries computed inline

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DoubleType
   * optimizes nothing per subspace; one Lloyd refinement inside each
   * subspace re-centers every sub-codeword on the vectors it actually
   * quantizes, which is where PQ's distortion budget is decided (the
-  * round-15 WhitenPqAb measurement motivated this: whitening could not
+  * round-15 whitening→PQ A/B in SCALE.md motivated this: whitening could not
   * pay precisely because the codebooks were affine images, not retrained).
   *
   * Training (mirrored CTE-for-CTE in q92's oracle):
@@ -60,7 +60,7 @@ object PqCodebooks {
 
   // ---- shared encode / ADC builders -------------------------------------
   // ONE definition of the packing and tie-break rules for every consumer
-  // (q92, q53's pq/pqt arms, the pq_encode stage, encodeDelta, WhitenPqAb):
+  // (q92, q53's pq/pqt arms, the pq_encode stage, encodeDelta):
   // a change to the 4-bit field layout, the argmin tie order, or the LUT
   // fold order edits here, not four hand-copies in lockstep.
 

@@ -21,7 +21,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   *   - cold (first-touch: includes the ingest-layout builds) and warm
   *     (min of 2 repeats) wall seconds per query,
   *   - the top candidate-volume plan nodes (Join/Generate/Expand
-  *     numOutputRows — [[SlopeProbe]]'s receipt) at each scale,
+  *     numOutputRows — the SCALE.md "Measured candidate slope" receipt)
+  *     at each scale,
   *   - the warm-time and candidate-row RATIOS, the numbers SCALE.md
   *     records: ~linear ⇒ ratio ≈ mult (minus the per-job fixed floor,
   *     which dominates sub-second rows); a quadratic leak shows up as
@@ -33,13 +34,23 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * generator is fully seeded per (source row, replica) — byte-identical
   * corpus across runs, no Date/Random-without-seed anywhere.
   *
+  * The core count comes from SPARK_GRAFT_CPUS (default 32), as in Bench.
+  * Run the residual-wall queries at 32 and at 8 cores (ABBA order across
+  * invocations cancels box heat drift) and compare the warm walls: ≈ 4
+  * for a compute-bound row with enough parallelism, ≈ 1 names a serial
+  * bottleneck (SCALE.md §"Round 22: core-count scaling receipts"):
+  *
+  *   SPARK_GRAFT_CPUS=8 runMain graft.tools.ScaleCanary 10 \
+  *     q107_simhash_calibration q53_ann_recall q21_ngram_jaccard \
+  *     q74_semdedup q39_simhash_neardup
+  *
   * Usage: runMain graft.tools.ScaleCanary [mult] [queryName...]
   */
 object ScaleCanary {
 
   private val Targets = Seq(
-    "q31_minhash_lsh", "q39_simhash_neardup", "q46_embedding_neardup_lsh",
-    "q51_decontaminate", "q53_ann_recall",
+    "q21_ngram_jaccard", "q31_minhash_lsh", "q39_simhash_neardup",
+    "q46_embedding_neardup_lsh", "q51_decontaminate", "q53_ann_recall",
     "q62_dedup_clusters", "q65_bm25", "q67_span_dedup", "q74_semdedup",
     "q77_lexical_knn", "q93_importance_resample",
     "q100_minhash_calibration", "q102_doc_keywords",
@@ -53,13 +64,14 @@ object ScaleCanary {
     val mult = args.headOption.flatMap(_.toIntOption).getOrElse(10)
     val names = args.drop(if (args.headOption.exists(_.toIntOption.isDefined)) 1 else 0)
     val targets = if (names.nonEmpty) Targets.filter(names.contains) else Targets
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // 16 targets × 2 corpora × 3 reps thrash the default 100-entry
+      // 20 targets × 2 corpora × 3 reps thrash the default 100-entry
       // Janino cache (the Bench.scala pitfall) — without this the warm
       // rows of job-heavy queries (q77's driver assembly) re-pay codegen
       // compilation every rep and read 5× their bench cost
@@ -68,6 +80,7 @@ object ScaleCanary {
     spark.sparkContext.setLogLevel("WARN")
 
     val canaryDir = ensureCorpus(spark, mult)
+    println(s"== cpus=$cpus")
 
     def walk(p: SparkPlan): Seq[SparkPlan] = (p.collect {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
@@ -135,10 +148,8 @@ object ScaleCanary {
     spark.stop()
   }
 
-  /** Build (once; stamped by _SUCCESS) the mult× synthetic corpus.
-    * Shared with [[CoreScale]] (the r22 core-count scaling receipt).
-    */
-  private[tools] def ensureCorpus(spark: SparkSession, mult: Int): String = {
+  /** Build (once; stamped by _SUCCESS) the mult× synthetic corpus. */
+  private def ensureCorpus(spark: SparkSession, mult: Int): String = {
     val out = s"${sys.props("java.io.tmpdir")}/graft-canary-x$mult"
     if (Files.exists(Paths.get(s"$out/_CANARY_SUCCESS"))) return out
     import spark.implicits._

@@ -52,8 +52,9 @@ final class MomentBuf(val wide: Boolean) {
     * floor(e[i]·e[j]·1e9 + 0.5), i <= j, into the slots — no allocation
     * beyond (rare) buffer growth. Narrow slots add with Math.addExact
     * (ANSI `sum(long)` semantics: fail loudly past 2^63); wide slots are
-    * 128-bit. d = 0 contributes nothing — exactly the explode twin's and
-    * the oracle's `unnest(range(0, 0))`.
+    * 128-bit with a checked hi word (fail loudly past 2^127). d = 0
+    * contributes nothing — exactly the explode twin's and the oracle's
+    * `unnest(range(0, 0))`.
     */
   def add(emb: ArrayData): Unit = {
     val d = emb.numElements()
@@ -72,8 +73,8 @@ final class MomentBuf(val wide: Boolean) {
           val slot = 2 * (base + ii)
           val lo = sums(slot)
           val nlo = lo + p
-          var hi = sums(slot + 1) + (p >> 63)
-          if (((lo & p) | ((lo | p) & ~nlo)) < 0) hi += 1
+          var hi = Math.addExact(sums(slot + 1), p >> 63)
+          if (((lo & p) | ((lo | p) & ~nlo)) < 0) hi = Math.addExact(hi, 1L)
           sums(slot) = nlo
           sums(slot + 1) = hi
         } else {
@@ -97,8 +98,8 @@ final class MomentBuf(val wide: Boolean) {
         val lo = sums(2 * i)
         val v = o.sums(2 * i)
         val nlo = lo + v
-        var hi = sums(2 * i + 1) + o.sums(2 * i + 1)
-        if (((lo & v) | ((lo | v) & ~nlo)) < 0) hi += 1
+        var hi = Math.addExact(sums(2 * i + 1), o.sums(2 * i + 1))
+        if (((lo & v) | ((lo | v) & ~nlo)) < 0) hi = Math.addExact(hi, 1L)
         sums(2 * i) = nlo
         sums(2 * i + 1) = hi
         i += 1

@@ -167,7 +167,7 @@ class PlanSpec extends SparkSpec {
     assert(!p35.contains("Expand"), p35.take(600))
     assert(p35.contains("linear_count_buckets"), p35.take(600))
     // q10 stays split: the single-scan Expand alternative was re-tried in
-    // r13 and lost the interleaved A/B (tools/Q10Ab: split 0.82 s median
+    // r13 and lost the interleaved A/B (OPTIMIZATION_r21.md: split 0.82 s median
     // vs expand 1.10 s at sf0.1 — expand's one wide shuffle stage
     // serializes worse on wall than four pipelined single-column jobs,
     // despite lower aggregate task time)

@@ -853,12 +853,67 @@ class QuerySpec extends SparkSpec {
       "pqt/pq read budgets diverged — the comparison is no longer like-for-like")
   }
 
-  test("q53 window-knob twin produces identical rows to the topk-agg default") {
-    val agg = queries.VectorOps.q53AnnRecall.fn(spark, sf).collect().map(_.toSeq).toSeq
-    queries.VectorOps.topKAggTop10 = false
-    try {
-      val win = queries.VectorOps.q53AnnRecall.fn(spark, sf).collect().map(_.toSeq).toSeq
-      assert(win == agg, "window twin diverged from topk-agg selection")
-    } finally queries.VectorOps.topKAggTop10 = true
+  test("q53 rows and job count match the recording from when its three assemblies agreed") {
+    // Recorded when the window twin, the per-arm Future assembly and the
+    // fused tagged-union assembly still coexisted and returned identical
+    // rows; only the fused assembly remains. The aggregate ≡ row_number
+    // selection equivalence stays pinned in TopKSpec.
+    val want = Seq[(String, Long, Long, Double, Double)](
+      ("ivf", 0L, 3L, 0.3D, 0.20121951219512196D), ("ivf", 1L, 1L, 0.1D, 0.19308943089430894D),
+      ("ivf", 2L, 5L, 0.5D, 0.20121951219512196D), ("ivf", 3L, 2L, 0.2D, 0.20934959349593496D),
+      ("ivf", 4L, 3L, 0.3D, 0.2073170731707317D), ("ivf", 5L, 2L, 0.2D, 0.20121951219512196D),
+      ("ivf", 6L, 5L, 0.5D, 0.21747967479674796D), ("ivf", 7L, 4L, 0.4D, 0.18089430894308944D),
+      ("lsh", 0L, 6L, 0.6D, 0.3008130081300813D), ("lsh", 1L, 6L, 0.6D, 0.241869918699187D),
+      ("lsh", 2L, 4L, 0.4D, 0.2621951219512195D), ("lsh", 3L, 3L, 0.3D, 0.23780487804878048D),
+      ("lsh", 4L, 6L, 0.6D, 0.2784552845528455D), ("lsh", 5L, 5L, 0.5D, 0.23373983739837398D),
+      ("lsh", 6L, 3L, 0.3D, 0.23983739837398374D), ("lsh", 7L, 1L, 0.1D, 0.241869918699187D),
+      ("lsh12", 0L, 4L, 0.4D, 0.11178861788617886D), ("lsh12", 1L, 1L, 0.1D, 0.08739837398373984D),
+      ("lsh12", 2L, 3L, 0.3D, 0.07317073170731707D), ("lsh12", 3L, 3L, 0.3D, 0.08333333333333333D),
+      ("lsh12", 4L, 0L, 0.0D, 0.034552845528455285D), ("lsh12", 5L, 1L, 0.1D, 0.07113821138211382D),
+      ("lsh12", 6L, 1L, 0.1D, 0.07113821138211382D), ("lsh12", 7L, 0L, 0.0D, 0.06910569105691057D),
+      ("pq", 0L, 7L, 0.7D, 0.2032520325203252D), ("pq", 1L, 4L, 0.4D, 0.2032520325203252D),
+      ("pq", 2L, 4L, 0.4D, 0.2032520325203252D), ("pq", 3L, 5L, 0.5D, 0.2032520325203252D),
+      ("pq", 4L, 7L, 0.7D, 0.2032520325203252D), ("pq", 5L, 10L, 1.0D, 0.2032520325203252D),
+      ("pq", 6L, 9L, 0.9D, 0.2032520325203252D), ("pq", 7L, 6L, 0.6D, 0.2032520325203252D),
+      ("pqt", 0L, 10L, 1.0D, 0.2032520325203252D), ("pqt", 1L, 6L, 0.6D, 0.2032520325203252D),
+      ("pqt", 2L, 6L, 0.6D, 0.2032520325203252D), ("pqt", 3L, 5L, 0.5D, 0.2032520325203252D),
+      ("pqt", 4L, 6L, 0.6D, 0.2032520325203252D), ("pqt", 5L, 7L, 0.7D, 0.2032520325203252D),
+      ("pqt", 6L, 9L, 0.9D, 0.2032520325203252D), ("pqt", 7L, 6L, 0.6D, 0.2032520325203252D))
+    def run(): Seq[(String, Long, Long, Double, Double)] =
+      try queries.VectorOps.q53AnnRecall.fn(spark, sf).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
+      finally Caches.clearAll(spark)
+    assert(run() == want)
+    // 15 jobs: the query-row collect, the two concurrent arm actions and
+    // their AQE stage jobs, and the final collect. The re-rank action's
+    // thread inherits the caller's job group, so the group sees every job.
+    val sc = spark.sparkContext
+    sc.setJobGroup("q53-jobs", "q53 job accounting", interruptOnCancel = false)
+    try run() finally sc.clearJobGroup()
+    // the statusTracker fills asynchronously — poll until stable
+    def count: Int = sc.statusTracker.getJobIdsForGroup("q53-jobs").length
+    var last = -1; var jobs = count
+    while (jobs != last) { Thread.sleep(200); last = jobs; jobs = count }
+    assert(jobs == 15, s"q53 ran $jobs jobs")
+  }
+
+  test("q53 over a corpus with no query vectors returns no rows, like the oracle") {
+    // every table of sf0.001, with the RecallQueries (vec_id < 8) query
+    // rows removed from embeddings: the exact arm then has no groups
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("q53-noqueries").toString
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents").foreach { t =>
+      Files.copy(Paths.get(sf, s"$t.parquet"), Paths.get(dir, s"$t.parquet"))
+    }
+    // one parquet FILE (not a Spark output directory), so DuckDB and
+    // tools/selfcheck.py read the same dir unchanged
+    spark.read.parquet(s"$sf/embeddings.parquet").filter(col("vec_id") >= 8)
+      .coalesce(1).write.parquet(s"$dir/_emb")
+    val part = new java.io.File(s"$dir/_emb").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, Paths.get(dir, "embeddings.parquet"))
+    try assert(queries.VectorOps.q53AnnRecall.fn(spark, dir).collect().isEmpty)
+    finally Caches.clearAll(spark)
   }
 }
