@@ -68,6 +68,25 @@ import org.apache.spark.sql.functions._
   * capped/banded where it joins (dedup, decontaminate), dimension-sized
   * driver state (temperature_mix collects |languages| counts, nothing
   * else). No stage collects document rows.
+  *
+  * The composition-time rule: a chain is composed lazily and written
+  * once, but some stages must run a Spark action on their input while
+  * they are composed (a collected LM or count table, eager
+  * connected-components rounds — [[readsInputAtComposition]] lists them).
+  * Such an action runs every upstream stage, and without a cache the
+  * final write runs them all again. So [[apply]] persists those stages'
+  * input once (MEMORY_AND_DISK) and the stage reads only the cached flow;
+  * no stage persists its input itself. The persisted frame carries an
+  * added marker column, dropped from the stage's output: the cache
+  * manager substitutes an InMemoryRelation into any later plan whose
+  * canonicalized subtree matches the persisted one, and an identity
+  * projection canonicalizes away, so persisting a (possibly bare-scan)
+  * flow directly would hijack every other query over the same table for
+  * the session's lifetime, erasing pushed filters and join-size estimates
+  * (observed flipping q77's broadcast join to a sort-merge join). A
+  * schema change cannot canonicalize away. [[run]] unpersists the inputs
+  * its chain persisted once the chain is written; a caller of [[apply]]
+  * releases them itself.
   */
 object CurationStages {
 
@@ -112,9 +131,56 @@ object CurationStages {
     */
   val NearDedupFloor = 0.06
 
+  /** Whether `stage` runs a Spark action on its input while the chain is
+    * being composed (see the object scaladoc's composition-time rule):
+    * near_dedup and image_near_dedup (their connected-components rounds
+    * run eagerly over pairs derived from the flow), whiten (mean and
+    * covariance passes), importance_resample and curriculum_order (their
+    * LMs collect), temperature_mix (per-language counts collect),
+    * perplexity_filter with `order: 2` (the bigram scorer's driver-side
+    * table), assign_split with `splitFrom: flow` (components again) and
+    * bpe_annotate with `mergesFrom: flow` (the merge table learns on the
+    * driver). embed_near_dedup and semantic_dedup also run actions at
+    * composition, but over the embeddings table only — never over the
+    * flow — so they are not in the set. CurationSpec pins the set against
+    * measured composition-time reads.
+    */
+  private[graft] def readsInputAtComposition(stage: StageSpec): Boolean =
+    stage.op match {
+      case "near_dedup" | "image_near_dedup" | "whiten" |
+          "importance_resample" | "curriculum_order" | "temperature_mix" => true
+      case "perplexity_filter" => stage.int("order", 1) == 2
+      case "assign_split" => stage.strOr("splitFrom", "flow") == "flow"
+      case "bpe_annotate" => stage.strOr("mergesFrom", "flow") == "flow"
+      case _ => false
+    }
+
+  /** Marker column under a composition-time persist (object scaladoc). */
+  private val FlowMarker = "__flow"
+
+  /** One stage over `docs`. A stage in the composition-time set gets its
+    * input persisted here; the caller releases it (`Caches.clearAll`, or
+    * [[run]], which releases what its chain persisted).
+    */
   def apply(docs: DataFrame, stage: StageSpec,
       embeddingsDefault: Option[String] = None,
-      sourceDirDefault: Option[String] = None): DataFrame = stage.op match {
+      sourceDirDefault: Option[String] = None): DataFrame =
+    tracked(docs, stage, embeddingsDefault, sourceDirDefault, _ => ())
+
+  /** [[apply]], handing each frame it persists to `persisted`. */
+  private def tracked(docs: DataFrame, stage: StageSpec,
+      embeddingsDefault: Option[String], sourceDirDefault: Option[String],
+      persisted: DataFrame => Unit): DataFrame =
+    if (readsInputAtComposition(stage)) {
+      val flow = docs.withColumn(FlowMarker, lit(true))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      persisted(flow)
+      compose(flow, stage, embeddingsDefault, sourceDirDefault).drop(FlowMarker)
+    } else compose(docs, stage, embeddingsDefault, sourceDirDefault)
+
+  private def compose(docs: DataFrame, stage: StageSpec,
+      embeddingsDefault: Option[String],
+      sourceDirDefault: Option[String]): DataFrame = stage.op match {
 
     // q20 semantics: one canonical (minimum) doc_id per exact text
     case "exact_dedup" =>
@@ -488,16 +554,11 @@ object CurationStages {
       // twin (TextOps.curriculumModel / curriculumScoredFrame) — trained
       // on the FLOWING frame (stage semantics: the curriculum is over
       // what survived upstream curation, not the raw corpus). The model
-      // collects at composition time (importance_resample's documented
-      // side-effect pattern), so the flow persists under a marker column
-      // for the stage's three reads — see the __dsir_flow note below for
-      // why the marker is load-bearing.
-      val cflow = docs.withColumn("__cur_flow", lit(true))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val m = graft.queries.TextOps.curriculumModel(cflow, vocab)
-      val phases = graft.queries.TextOps.curriculumScoredFrame(cflow, m, vocab)
+      // collects at composition time, so the flow arrives persisted.
+      val m = graft.queries.TextOps.curriculumModel(docs, vocab)
+      val phases = graft.queries.TextOps.curriculumScoredFrame(docs, m, vocab)
         .select("doc_id", "phase")
-      cflow.join(phases, Seq("doc_id"), "left").drop("__cur_flow")
+      docs.join(phases, Seq("doc_id"), "left")
 
     // q49's consistent-hash gate with a declared per-language rate table
     case "stratified_sample" =>
@@ -518,36 +579,15 @@ object CurationStages {
       val targets = stage.strOr("targetSources",
         graft.queries.TextOps.DsirTargets.mkString(","))
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      // The stage reads the flowing chain THREE times — the LM-training
-      // collect inside importanceScored, the scored right side of the
-      // semi join, and the left side — so the flow persists for the
-      // stage's duration (perplexity_filter's discipline; released by the
-      // job-level clearCreatedSince sweep). SIDE EFFECT, by design: the
-      // LM collect fires HERE, at stage-COMPOSITION time, materializing
-      // the persisted upstream chain before the job output is written —
-      // the 64-double LM must exist to build the scorer column at all,
-      // and any later consumer of the composed frame re-reads the
-      // persisted blocks instead of re-running corpus-scale stages.
-      //
-      // The MARKER COLUMN under the persist is load-bearing: the cache
-      // manager substitutes InMemoryRelation into any later plan whose
-      // canonicalized subtree matches the persisted one, and an identity
-      // projection canonicalizes AWAY — so persisting the (possibly
-      // bare-scan) flow directly would hijack every other query over the
-      // same table for the session's lifetime, erasing their pushed
-      // filters and join-size estimates (observed flipping q77's
-      // broadcast join to a sort-merge join when a spec composed this
-      // stage). The extra column changes the OUTPUT SCHEMA, which no
-      // schema-preserving canonicalization can erase, so only this
-      // stage's three reads (all through `flow` itself) hit the cache;
-      // it is dropped from the stage's output below.
-      val flow = docs.withColumn("__dsir_flow", lit(true))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val keep = graft.queries.TextOps.importanceScored(flow, targets)
+      // reads the flow three times — the LM-training collect inside
+      // importanceScored (at composition time, so the flow arrives
+      // persisted), the scored right side of the semi join, and the left
+      // side
+      val keep = graft.queries.TextOps.importanceScored(docs, targets)
         .orderBy(col("gkey").desc, col("doc_id"))
         .limit(budget)
         .select("doc_id")
-      flow.join(keep, Seq("doc_id"), "left_semi").drop("__dsir_flow")
+      docs.join(keep, Seq("doc_id"), "left_semi")
 
     // q57's share^alpha mixing weights, applied as per-language keep
     // RATES through the same consistent hash — map-only (an exact
@@ -737,17 +777,22 @@ object CurationStages {
       when(col("lang") === l, lit(pct)).otherwise(acc)
     }
 
-  /** Run the declared chain, optionally auditing row counts per stage
-    * (one count action per stage — opt-in; at 100 TB each audit is a full
-    * pass over that stage's output).
+  /** Compose the declared chain over `docs`, hand the composed frame to
+    * `sink` (the chain's one write), then release every input the chain
+    * persisted under the composition-time rule — blocks AND cache-manager
+    * entry, even when a stage or the sink fails. Unpersisting only the
+    * blocks would leave the entry behind, and an identical chain composed
+    * later in the session would be planned over it: no cache, and a
+    * lineage that can run through connected-components checkpoints
+    * released with the first job.
     */
   def run(docs: DataFrame, stages: Seq[StageSpec],
-      audit: Option[(String, Long) => Unit] = None,
       embeddingsDefault: Option[String] = None,
-      sourceDirDefault: Option[String] = None): DataFrame =
-    stages.foldLeft(docs) { (df, st) =>
-      val out = CurationStages(df, st, embeddingsDefault, sourceDirDefault)
-      audit.foreach(f => f(st.op, out.count()))
-      out
-    }
+      sourceDirDefault: Option[String] = None)(sink: DataFrame => Unit): Unit = {
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try sink(stages.foldLeft(docs) { (df, st) =>
+      tracked(df, st, embeddingsDefault, sourceDirDefault, persisted += _)
+    })
+    finally persisted.foreach(_.unpersist(blocking = true))
+  }
 }

@@ -212,17 +212,19 @@ object JobRunner {
       // declare the stage's 'embeddings' param itself.
       val embDefault =
         if (src.table.nonEmpty) Some(s"${src.path}/embeddings.parquet") else None
-      // stage-internal persists (e.g. perplexity_filter's scoring frames)
-      // are scoped to THIS job — release exactly those on exit, by diffing
-      // the persisted-RDD set, so a SHARED long-lived session running
-      // concurrent work keeps its own caches (Y5 discipline; the dedicated
-      // CLI entrypoint still clearAll's at process end in main()).
+      // CurationStages.run releases the stage inputs it persisted; the
+      // persists inside stage operators (e.g. connected-components
+      // checkpoints) are scoped to THIS job too — release exactly those on
+      // exit, by diffing the persisted-RDD set, so a SHARED long-lived
+      // session running concurrent work keeps its own caches (Y5
+      // discipline; the dedicated CLI entrypoint still clearAll's at
+      // process end in main()).
       val before = graft.Caches.snapshot(spark)
       try CurationStages.run(spark.read.format(src.format).load(src.dataPath),
           cfg.stages, embeddingsDefault = embDefault,
-          sourceDirDefault = if (src.table.nonEmpty) Some(src.path) else None)
-        .write.mode("overwrite").format(cfg.outputFormat)
-        .save(s"${cfg.output}/corpus")
+          sourceDirDefault = if (src.table.nonEmpty) Some(src.path) else None) {
+        _.write.mode("overwrite").format(cfg.outputFormat).save(s"${cfg.output}/corpus")
+      }
       finally graft.Caches.clearCreatedSince(spark, before)
     }
 

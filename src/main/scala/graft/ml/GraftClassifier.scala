@@ -173,9 +173,12 @@ class GraftClassifierModel private[ml] (
 
 object GraftClassifierModel {
 
-  /** Rehydrate a model written by [[GraftClassifierModel.save]]. */
+  /** Rehydrate a model written by [[GraftClassifierModel.save]] in ONE
+    * job: the read declares the schema save writes, so no inference pass.
+    */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): GraftClassifierModel = {
-    val r = spark.read.parquet(path).head()
+    val r = spark.read.schema("uid STRING, weights ARRAY<DOUBLE>, dim INT, " +
+      "numClasses INT, featuresCol STRING, labelCol STRING").parquet(path).head()
     val m = new GraftClassifierModel(r.getString(0), r.getSeq[Double](1).toArray)
     m.set(m.dim, r.getInt(2))
     m.set(m.numClasses, r.getInt(3))

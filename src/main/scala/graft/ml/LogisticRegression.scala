@@ -39,39 +39,44 @@ class LogisticRegression(dim: Int, cfg: TrainConfig = TrainConfig()) extends Ser
     val cached =
       if (data.getStorageLevel == StorageLevel.NONE) data.persist(StorageLevel.MEMORY_AND_DISK)
       else data
-    val n = cached.count().toDouble
-    val sc = cached.sparkContext
-    var w = new Array[Double](dim)
-    var it = 0
-    while (it < cfg.iters) {
-      val bw = sc.broadcast(w)
-      // grad partials: (grad sums, loss sum) — merged associatively in a tree
-      val (grad, _) = cached.treeAggregate((new Array[Double](dim), 0.0))(
-        seqOp = { case ((g, l), (x, y)) =>
-          val p = sigmoid(dot(bw.value, x))
-          val err = p - y
-          var i = 0
-          while (i < dim) { g(i) += err * x(i); i += 1 }
-          (g, l - (y * math.log(math.max(p, 1e-15)) +
-            (1 - y) * math.log(math.max(1 - p, 1e-15))))
-        },
-        combOp = { case ((g1, l1), (g2, l2)) =>
-          var i = 0
-          while (i < dim) { g1(i) += g2(i); i += 1 }
-          (g1, l1 + l2)
-        })
-      var i = 0
-      val next = new Array[Double](dim)
-      while (i < dim) {
-        next(i) = w(i) - cfg.lr * (grad(i) / n + cfg.l2 * w(i))
-        i += 1
-      }
-      w = next
-      bw.destroy()
-      it += 1
+    try {
+      var w = new Array[Double](dim)
+      var it = 0
+      while (it < cfg.iters) { w = step(cached, w); it += 1 }
+      w
+    } finally cached.unpersist(blocking = false)
+  }
+
+  /** One full-batch gradient step — ONE treeAggregate pass: gradient
+    * partials and the row count combine map-side and merge in a tree, so
+    * the step needs no separate count job (n is the pass's own count).
+    * An empty training source fails here, on the first pass, instead of
+    * dividing the gradient by zero into an all-NaN model.
+    */
+  private def step(cached: RDD[(Array[Float], Double)], w: Array[Double]): Array[Double] = {
+    val bw = cached.sparkContext.broadcast(w)
+    val (grad, n) = cached.treeAggregate((new Array[Double](dim), 0L))(
+      seqOp = { case ((g, c), (x, y)) =>
+        val err = sigmoid(dot(bw.value, x)) - y
+        var i = 0
+        while (i < dim) { g(i) += err * x(i); i += 1 }
+        (g, c + 1L)
+      },
+      combOp = { case ((g1, c1), (g2, c2)) =>
+        var i = 0
+        while (i < dim) { g1(i) += g2(i); i += 1 }
+        (g1, c1 + c2)
+      })
+    bw.destroy()
+    if (n == 0L) throw new IllegalArgumentException(
+      "training source is empty: no rows to fit")
+    val next = new Array[Double](dim)
+    var i = 0
+    while (i < dim) {
+      next(i) = w(i) - cfg.lr * (grad(i) / n.toDouble + cfg.l2 * w(i))
+      i += 1
     }
-    cached.unpersist(blocking = false)
-    w
+    next
   }
 
   /** M1 variant — minibatch local SGD with per-epoch model averaging: each
@@ -164,34 +169,19 @@ class LogisticRegression(dim: Int, cfg: TrainConfig = TrainConfig()) extends Ser
       train: RDD[(Array[Float], Double)],
       validation: RDD[(Array[Float], Double)]): (Array[Double], DataFrame) = {
     val cached = train.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = cached.count().toDouble
-    val sc = cached.sparkContext
     var w = new Array[Double](dim)
     val metrics = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Double)]
-    var it = 0
-    while (it < cfg.iters) {
-      val bw = sc.broadcast(w)
-      val (grad, _) = cached.treeAggregate((new Array[Double](dim), 0.0))(
-        seqOp = { case ((g, l), (x, y)) =>
-          val p = sigmoid(dot(bw.value, x)); val err = p - y
-          var i = 0; while (i < dim) { g(i) += err * x(i); i += 1 }
-          (g, l)
-        },
-        combOp = { case ((g1, l1), (g2, l2)) =>
-          var i = 0; while (i < dim) { g1(i) += g2(i); i += 1 }
-          (g1, l1 + l2)
-        })
-      var i = 0
-      val next = new Array[Double](dim)
-      while (i < dim) { next(i) = w(i) - cfg.lr * (grad(i) / n + cfg.l2 * w(i)); i += 1 }
-      w = next
-      if ((it + 1) % cfg.validateEvery == 0 || it == cfg.iters - 1) {
-        val (acc, loss) = evaluate(validation, w)
-        metrics += ((it + 1, acc, loss))
+    try {
+      var it = 0
+      while (it < cfg.iters) {
+        w = step(cached, w)
+        if ((it + 1) % cfg.validateEvery == 0 || it == cfg.iters - 1) {
+          val (acc, loss) = evaluate(validation, w)
+          metrics += ((it + 1, acc, loss))
+        }
+        it += 1
       }
-      it += 1
-    }
-    cached.unpersist(blocking = false)
+    } finally cached.unpersist(blocking = false)
     import spark.implicits._
     (w, metrics.toSeq.toDF("iteration", "accuracy", "loss"))
   }
@@ -217,15 +207,15 @@ class LogisticRegression(dim: Int, cfg: TrainConfig = TrainConfig()) extends Ser
   }
 
   /** M4 `test`: features + element-wise VectorMean per output column
-    * (CaffeOnSpark.scala:396-418). Returns blob→mean map.
+    * (CaffeOnSpark.scala:396-418), every blob's mean in ONE aggregation
+    * pass. Returns blob→mean map.
     */
   def test(df: DataFrame, idCol: String, featCol: String,
       weights: Array[Double]): Map[String, Seq[Double]] = {
-    val f = features(df, idCol, featCol, weights)
-    Seq("ip1" -> 1, "prob" -> 2).map { case (name, dim_) =>
-      val vm = udaf(new VectorMean(dim_))
-      name -> f.agg(vm(col(name))).head().getSeq[Double](0)
-    }.toMap
+    val means = Seq("ip1" -> 1, "prob" -> 2).map { case (name, d) =>
+      udaf(new VectorMean(d)).apply(col(name)).as(name) }
+    val r = features(df, idCol, featCol, weights).agg(means.head, means.tail: _*).head()
+    r.schema.fieldNames.zipWithIndex.map { case (name, i) => name -> r.getSeq[Double](i) }.toMap
   }
 
   def evaluate(data: RDD[(Array[Float], Double)], w: Array[Double]): (Double, Double) = {
@@ -238,6 +228,8 @@ class LogisticRegression(dim: Int, cfg: TrainConfig = TrainConfig()) extends Ser
     }.treeAggregate((0L, 0.0, 0L))(
       { case ((c, l, n0), (c1, l1, n1)) => (c + c1, l + l1, n0 + n1) },
       { case ((c, l, n0), (c1, l1, n1)) => (c + c1, l + l1, n0 + n1) })
+    if (n == 0L) throw new IllegalArgumentException(
+      "validation source is empty: no rows to score")
     (correct.toDouble / n, loss / n)
   }
 
@@ -257,8 +249,11 @@ object LogisticRegression {
     w.zipWithIndex.map { case (v, i) => (i, v) }.toSeq.toDF("idx", "w")
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
-  def loadWeights(spark: SparkSession, path: String): Array[Double] = {
-    val rows = spark.read.parquet(path).orderBy("idx").collect()
-    rows.map(_.getDouble(1))
-  }
+  /** Restore a [[saveWeights]] snapshot in ONE job: the schema is the one
+    * saveWeights writes (no inference pass), and the O(dim) rows sort on
+    * the driver (no shuffle).
+    */
+  def loadWeights(spark: SparkSession, path: String): Array[Double] =
+    spark.read.schema("idx INT, w DOUBLE").parquet(path).collect()
+      .sortBy(_.getInt(0)).map(_.getDouble(1))
 }

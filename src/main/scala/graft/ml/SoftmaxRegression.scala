@@ -51,50 +51,57 @@ class SoftmaxRegression(dim: Int, numClasses: Int,
     val wasCached = data.getStorageLevel != StorageLevel.NONE
     val cached =
       if (wasCached) data else data.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = cached.count().toDouble
-    val sc = cached.sparkContext
-    var w = init.clone()
-    var it = 0
-    while (it < iters) {
-      val bw = sc.broadcast(w)
-      val (grad, _) = cached.treeAggregate((new Array[Double](size), 0.0))(
-        seqOp = { case ((g, l), (x, y)) =>
-          val p = probs(bw.value, x)
-          val yi = y.toInt
-          // label-domain check in the hot path (two comparisons against
-          // the k·dim gradient loop — negligible): an out-of-range label
-          // must fail as a CONFIG error naming the value, not as an
-          // opaque ArrayIndexOutOfBounds inside an executor task
-          // (JobConfig validates 'classes' but cannot see the data)
-          if (yi < 0 || yi >= k) throw new IllegalArgumentException(
-            s"softmax label $y out of range [0, $k) — check the 'classes' " +
-              "config against the data's label domain")
-          var c = 0
-          while (c < k) {
-            val err = p(c) - (if (c == yi) 1.0 else 0.0)
-            var i = 0
-            while (i < dim) { g(c * dim + i) += err * x(i); i += 1 }
-            c += 1
-          }
-          (g, l - math.log(math.max(p(yi), 1e-15)))
-        },
-        combOp = { case ((g1, l1), (g2, l2)) =>
+    try {
+      var w = init.clone()
+      var it = 0
+      while (it < iters) { w = step(cached, w); it += 1 }
+      w
+    } finally if (!wasCached) cached.unpersist(blocking = false)
+  }
+
+  /** One full-batch gradient step — ONE treeAggregate pass: gradient
+    * partials and the row count merge in a tree, so no separate count job
+    * runs per warm-start window. An empty training source fails here
+    * instead of dividing the gradient by zero into an all-NaN model.
+    */
+  private def step(cached: RDD[(Array[Float], Double)], w: Array[Double]): Array[Double] = {
+    val bw = cached.sparkContext.broadcast(w)
+    val (grad, n) = cached.treeAggregate((new Array[Double](size), 0L))(
+      seqOp = { case ((g, cnt), (x, y)) =>
+        val p = probs(bw.value, x)
+        val yi = y.toInt
+        // label-domain check in the hot path (two comparisons against
+        // the k·dim gradient loop — negligible): an out-of-range label
+        // must fail as a CONFIG error naming the value, not as an
+        // opaque ArrayIndexOutOfBounds inside an executor task
+        // (JobConfig validates 'classes' but cannot see the data)
+        if (yi < 0 || yi >= k) throw new IllegalArgumentException(
+          s"softmax label $y out of range [0, $k) — check the 'classes' " +
+            "config against the data's label domain")
+        var c = 0
+        while (c < k) {
+          val err = p(c) - (if (c == yi) 1.0 else 0.0)
           var i = 0
-          while (i < size) { g1(i) += g2(i); i += 1 }
-          (g1, l1 + l2)
-        })
-      val next = new Array[Double](size)
-      var i = 0
-      while (i < size) {
-        next(i) = w(i) - cfg.lr * (grad(i) / n + cfg.l2 * w(i))
-        i += 1
-      }
-      w = next
-      bw.destroy()
-      it += 1
+          while (i < dim) { g(c * dim + i) += err * x(i); i += 1 }
+          c += 1
+        }
+        (g, cnt + 1L)
+      },
+      combOp = { case ((g1, c1), (g2, c2)) =>
+        var i = 0
+        while (i < size) { g1(i) += g2(i); i += 1 }
+        (g1, c1 + c2)
+      })
+    bw.destroy()
+    if (n == 0L) throw new IllegalArgumentException(
+      "training source is empty: no rows to fit")
+    val next = new Array[Double](size)
+    var i = 0
+    while (i < size) {
+      next(i) = w(i) - cfg.lr * (grad(i) / n.toDouble + cfg.l2 * w(i))
+      i += 1
     }
-    if (!wasCached) cached.unpersist(blocking = false)
-    w
+    next
   }
 
   /** M2 `trainWithValidation`, k-class: metric rows (iteration, accuracy,
@@ -111,15 +118,16 @@ class SoftmaxRegression(dim: Int, numClasses: Int,
     // reference's interleave without duplicating the gradient code
     val cached = train.persist(StorageLevel.MEMORY_AND_DISK)
     var w = new Array[Double](size)
-    var done = 0
-    while (done < cfg.iters) {
-      val step = math.min(cfg.validateEvery, cfg.iters - done)
-      w = fitFrom(cached, w, step)
-      done += step
-      val (acc, loss) = evaluate(validation, w)
-      metrics += ((done, acc, loss))
-    }
-    cached.unpersist(blocking = false)
+    try {
+      var done = 0
+      while (done < cfg.iters) {
+        val window = math.min(cfg.validateEvery, cfg.iters - done)
+        w = fitFrom(cached, w, window)
+        done += window
+        val (acc, loss) = evaluate(validation, w)
+        metrics += ((done, acc, loss))
+      }
+    } finally cached.unpersist(blocking = false)
     import spark.implicits._
     (w, metrics.toSeq.toDF("iteration", "accuracy", "loss"))
   }
@@ -144,14 +152,14 @@ class SoftmaxRegression(dim: Int, numClasses: Int,
       array(es.map(e => (e / denom).cast(FloatType)): _*).as("prob"))
   }
 
-  /** M4 `test`: element-wise [[VectorMean]] of each output blob. */
+  /** M4 `test`: element-wise [[VectorMean]] of each output blob, all in
+    * one aggregation pass.
+    */
   def test(df: DataFrame, idCol: String, featCol: String,
       weights: Array[Double]): Map[String, Seq[Double]] = {
-    val f = features(df, idCol, featCol, weights)
-    Seq("ip1", "prob").map { name =>
-      val vm = udaf(new VectorMean(k))
-      name -> f.agg(vm(col(name))).head().getSeq[Double](0)
-    }.toMap
+    val means = Seq("ip1", "prob").map(name => udaf(new VectorMean(k)).apply(col(name)).as(name))
+    val r = features(df, idCol, featCol, weights).agg(means.head, means.tail: _*).head()
+    r.schema.fieldNames.zipWithIndex.map { case (name, i) => name -> r.getSeq[Double](i) }.toMap
   }
 
   /** (accuracy, mean cross-entropy loss) of `w` on `data`; prediction is
@@ -171,6 +179,8 @@ class SoftmaxRegression(dim: Int, numClasses: Int,
     }.treeAggregate((0L, 0.0, 0L))(
       { case ((c, l, n0), (c1, l1, n1)) => (c + c1, l + l1, n0 + n1) },
       { case ((c, l, n0), (c1, l1, n1)) => (c + c1, l + l1, n0 + n1) })
+    if (n == 0L) throw new IllegalArgumentException(
+      "validation source is empty: no rows to score")
     (correct.toDouble / n, loss / n)
   }
 

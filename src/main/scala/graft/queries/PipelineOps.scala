@@ -76,11 +76,15 @@ object PipelineOps {
   /** The q50 packer over any documents-shaped frame, with the token budget
     * as a parameter — shared by the registered query (budget 256) and the
     * curation pipeline's pack stage. Keeps the caller's columns and adds
-    * n_tok / cum_tok / bin.
+    * n_tok / cum_tok / bin. A chunked flow (the chunk stage's output)
+    * carries several rows per doc_id, so chunk_start completes the
+    * running-sum order: by doc_id alone, the sum over one doc's chunks
+    * would follow whatever row order the plan delivers.
     */
   private[graft] def packed(docs: org.apache.spark.sql.DataFrame,
       tokenBudget: Int): org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy("lang", "source").orderBy("doc_id")
+    val order = ("doc_id" +: Seq("chunk_start").filter(docs.columns.contains)).map(col)
+    val w = Window.partitionBy("lang", "source").orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs
       .withColumn("n_tok", size(toks).cast("long"))

@@ -47,17 +47,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     // the adjacency blocks build inside round 1's job — so a run costs
     // its rounds and nothing else (the DataFrame loop this replaced took
     // ~9 AQE stage-jobs per round on the same chain)
-    val sc = spark.sparkContext
     import spark.implicits._
     val chain = (0L until 64L).map(i => (i, i + 1)).toDF("a", "b")
-    sc.setJobGroup("cc-rounds", "cc job accounting", interruptOnCancel = false)
-    val rounds =
-      try Components.connectedComponentsInstrumented(chain)._2.length
-      finally sc.clearJobGroup()
-    // the statusTracker fills asynchronously — poll until stable
-    def count: Int = sc.statusTracker.getJobIdsForGroup("cc-rounds").length
-    var last = -1; var jobs = count
-    while (jobs != last) { Thread.sleep(200); last = jobs; jobs = count }
+    val (rounds, jobs) = countingJobs("cc-rounds")(
+      Components.connectedComponentsInstrumented(chain)._2.length)
     assert(jobs > 0)
     assert(jobs <= rounds + 1, s"$jobs jobs for $rounds rounds")
     // and the round count itself is the log-diameter invariant, directly:

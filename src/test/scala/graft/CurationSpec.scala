@@ -383,4 +383,54 @@ class CurationSpec extends SparkSpec {
     assert(keptBest == Set(20L, 30L),
       "canonical=best must keep the q18 quality argmax, ties to the smaller id")
   }
+
+  test("composition-time readers get their input persisted once; no other stage reads it while composed") {
+    import graft.jobs.{CurationStages, StageSpec}
+    // every row the stage's input scan produces ticks the accumulator: a
+    // stage in the persisted set reads its input at composition (filling
+    // the cache) and never again; a stage outside it reads none while
+    // composed
+    val reads = spark.sparkContext.longAccumulator("stage-input-reads")
+    val tick = udf { (_: Long) => reads.add(1); true }
+    val embPath = s"$sf/embeddings.parquet"
+    val docs = Tables(spark, sf, "documents")
+    val withEmb = docs.join(spark.read.parquet(embPath)
+      .select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
+    val variants = Seq(
+      StageSpec("near_dedup", Map("threshold" -> 0.5)) -> docs,
+      StageSpec("image_near_dedup") -> docs,
+      StageSpec("whiten") -> withEmb,
+      StageSpec("importance_resample") -> docs,
+      StageSpec("curriculum_order") -> docs,
+      StageSpec("temperature_mix", Map("budgetDocs" -> 200.0)) -> docs,
+      StageSpec("perplexity_filter", Map("order" -> 2.0)) -> docs,
+      StageSpec("assign_split") -> docs,
+      StageSpec("bpe_annotate") -> docs,
+      StageSpec("exact_dedup") -> docs,
+      StageSpec("embed_near_dedup", Map("minDot" -> 0.45)) -> docs,
+      StageSpec("semantic_dedup", Map("clusters" -> 8.0)) -> docs,
+      StageSpec("perplexity_filter") -> docs,
+      StageSpec("assign_split", Map("splitFrom" -> "corpus")) -> docs,
+      StageSpec("bpe_annotate", Map("mergesFrom" -> "corpus")) -> docs)
+    assert(variants.count(v => CurationStages.readsInputAtComposition(v._1)) == 9)
+    variants.foreach { case (st, raw) =>
+      val input = raw.filter(tick(col("doc_id")))
+      // ticks of one full scan (the filter may be inferred onto both
+      // sides of the embeddings join, ticking a row twice)
+      reads.reset()
+      input.write.format("noop").mode("overwrite").save()
+      val onePass = reads.value
+      reads.reset()
+      val out = CurationStages(input, st, Some(embPath), Some(sf))
+      val atComposition = reads.value
+      out.write.format("noop").mode("overwrite").save()
+      val total = reads.value
+      Caches.clearAll(spark)
+      val what = s"${st.op} ${st.params}: $atComposition rows read while " +
+        s"composed, $total in all, $onePass per full scan"
+      if (CurationStages.readsInputAtComposition(st))
+        assert(onePass > 0 && atComposition == onePass && total == onePass, what)
+      else assert(atComposition == 0, what)
+    }
+  }
 }

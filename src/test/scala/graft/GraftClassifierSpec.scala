@@ -85,8 +85,12 @@ class GraftClassifierSpec extends SparkSpec {
     val model = gc.fit(labeled)
     val path = java.nio.file.Files.createTempDirectory("gcm").toString + "/model"
     model.save(path)
-    val back = ml.GraftClassifierModel.load(spark, path)
+    val (back, jobs) = countingJobs("gcm-load")(ml.GraftClassifierModel.load(spark, path))
+    assert(jobs == 1, s"loading a saved model ran $jobs jobs")
     assert(back.uid == model.uid && back.weights.toSeq == model.weights.toSeq)
+    assert(back.getOrDefault(back.dim) == 64 && back.getOrDefault(back.numClasses) == 2 &&
+      back.getOrDefault(back.featuresCol) == "embedding" &&
+      back.getOrDefault(back.labelCol) == "y")
     val a = model.transform(labeled).select("vec_id", "ip1", "prob").collect().toSeq
     val b = back.transform(labeled).select("vec_id", "ip1", "prob").collect().toSeq
     assert(a == b, "reloaded model must transform bit-identically")

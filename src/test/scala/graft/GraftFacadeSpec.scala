@@ -37,4 +37,27 @@ class GraftFacadeSpec extends SparkSpec {
     assert(metrics.count() >= 2)
     assert(w.length == 64)
   }
+
+  test("an empty training or validation source fails naming it, for both heads") {
+    // the gradient step divides by the pass's row count: an empty source
+    // must fail loudly instead of returning an all-NaN model (or writing
+    // NaN accuracy/loss rows), and the training cache must not leak
+    val emb = Tables(spark, sf, "embeddings")
+      .withColumn("y", when(expr("embedding[0] + embedding[1]") > 0, 1).otherwise(0))
+    val empty = emb.filter(lit(false))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (classes <- Seq(2, 3)) {
+      val g = new Graft(spark, dim = 64,
+        TrainConfig(lr = 2.0, iters = 4, validateEvery = 2), numClasses = classes)
+      def fails(body: => Any): String =
+        intercept[IllegalArgumentException](body).getMessage
+      assert(fails(g.train(empty, labelCol = "y")).contains("training source is empty"))
+      assert(fails(g.trainWithValidation(empty, emb, labelCol = "y"))
+        .contains("training source is empty"))
+      assert(fails(g.trainWithValidation(emb, empty, labelCol = "y"))
+        .contains("validation source is empty"))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "a failed fit left its training cache behind")
+  }
 }

@@ -389,6 +389,83 @@ class JobRunnerSpec extends SparkSpec {
     assert(fpOf(corpus) == fpOf(again), "declared chain is not deterministic")
   }
 
+  test("lifecycle job counts per mode are pinned on the perfbench chain") {
+    // at this size each Spark job costs ~25-80 ms, so a redundant action —
+    // a curate stage re-running its upstream chain, a schema-inference
+    // read of a snapshot, a separate count before the gradient loop, one
+    // aggregation pass per test blob — is the cost. The chain and the ML
+    // job are perfbench's lifecycle workload (perfbench/src/perfbench/
+    // Main.scala), here over sf0.001 with the vec_id % 10 == 1 holdout.
+    val work = java.nio.file.Files.createTempDirectory("joblife").toString
+    val emb = Tables(spark, sf, "embeddings")
+    emb.filter(col("vec_id") % 10 =!= 1).write.mode("overwrite").parquet(s"$work/train")
+    emb.filter(col("vec_id") % 10 === 1).write.mode("overwrite").parquet(s"$work/val")
+    val curate = writeConf(
+      s"""{"source": {"path": "$sf", "table": "documents", "idCol": "doc_id"},
+         |"output": "$work/curated", "outputFormat": "parquet",
+         |"stages": [
+         |  {"op": "exact_dedup"},
+         |  {"op": "near_dedup", "threshold": 0.5},
+         |  {"op": "pii_scrub"},
+         |  {"op": "quality_filter", "minScore": 0.0},
+         |  {"op": "temperature_mix", "alpha": 0.5, "budgetDocs": 50000},
+         |  {"op": "multimodal_join"},
+         |  {"op": "pq_encode"},
+         |  {"op": "pack", "tokenBudget": 256}]}""".stripMargin)
+    val ml = writeConf(
+      s"""{"source": {"path": "$work/train", "labelCol": "label"},
+         |"validation": {"path": "$work/val", "labelCol": "label"},
+         |"dim": 64, "lr": 1.0, "iters": 20, "validateEvery": 10,
+         |"model": "$work/model", "output": "$work/ml_out",
+         |"outputFormat": "parquet"}""".stripMargin)
+    def modeJobs(tag: String): Seq[(String, Int)] =
+      Seq("curate" -> curate, "train" -> ml, "features" -> ml, "test" -> ml).map {
+        case (mode, conf) => mode -> countingJobs(s"lifecycle-$tag-$mode")(
+          JobRunner.run(spark, JobRunner.parse(Array(s"-$mode", "-conf", conf))))._2
+      }
+    // two passes build the layouts the chain reads, then load and memoize
+    // them; the counted pass starts, like each perfbench iteration, from
+    // an empty cache manager after an earlier chain
+    for (i <- 1 to 2) { modeJobs(s"warm$i"); Caches.clearAll(spark) }
+    val jobs = modeJobs("counted")
+    // curate: temperature_mix's composition-time collect must not run the
+    // upstream chain a second time; train: one job per gradient step and
+    // per validation pass plus the writes, no separate count; features
+    // and test: ONE job to load the weights, and test aggregates both
+    // blobs in one pass
+    assert(jobs == Seq("curate" -> 28, "train" -> 26, "features" -> 3, "test" -> 4),
+      s"lifecycle jobs per mode moved: $jobs")
+  }
+
+  test("a curate with composition-time persists leaves the persisted-RDD set as it found it") {
+    import graft.jobs.{CurationStages, StageSpec}
+    import org.apache.spark.storage.StorageLevel
+    // CurationStages.run releases each input it persisted — blocks AND
+    // cache-manager entry — once the sink has written: a frame with
+    // temperature_mix's input plan (the docs under the marker column) is
+    // cached while the chain is written and uncached after
+    val docs = Tables(spark, sf, "documents")
+    val flowPlan = docs.withColumn("__flow", lit(true))
+    var during = StorageLevel.NONE
+    CurationStages.run(docs,
+        Seq(StageSpec("temperature_mix", Map("budgetDocs" -> 200.0)))) { out =>
+      out.write.format("noop").mode("overwrite").save()
+      during = flowPlan.storageLevel
+    }
+    assert(during == StorageLevel.MEMORY_AND_DISK && flowPlan.storageLevel == StorageLevel.NONE)
+    // and a -curate job releases exactly the RDDs it persisted
+    val work = java.nio.file.Files.createTempDirectory("jobleak").toString
+    val conf = writeConf(
+      s"""{"source": {"path": "$sf", "table": "documents", "idCol": "doc_id"},
+         |"output": "$work/out", "outputFormat": "parquet",
+         |"stages": [{"op": "exact_dedup"}, {"op": "near_dedup", "threshold": 0.5},
+         |  {"op": "temperature_mix", "alpha": 0.5, "budgetDocs": 200}]}""".stripMargin)
+    val atStart = spark.sparkContext.getPersistentRDDs.keySet
+    JobRunner.run(spark, JobRunner.parse(Array("-curate", "-conf", conf)))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == atStart,
+      "the curate job left persisted RDDs behind")
+  }
+
   test("bpe_annotate stage: post-BPE sequence lengths ride the declared chain (q84 parity)") {
     val work = java.nio.file.Files.createTempDirectory("jobbpe").toString
     // pass-through chain: the stage alone, so the learned tokenizer is

@@ -333,9 +333,16 @@ class MlSpec extends SparkSpec {
   }
 
   test("weight snapshot round-trips through parquet") {
-    val w = Array.tabulate(64)(_ * 0.5)
+    // bit-exact over a wide exponent range and a signed zero, in ONE job
+    // (the declared schema skips inference; the driver orders by idx)
+    val rnd = new scala.util.Random(7)
+    val w = Array.tabulate(192)(i =>
+      if (i == 5) -0.0 else rnd.nextGaussian() * math.pow(10, rnd.nextInt(40) - 20))
     val path = java.nio.file.Files.createTempDirectory("wts").toString + "/w"
     LogisticRegression.saveWeights(spark, w, path)
-    assert(LogisticRegression.loadWeights(spark, path).toSeq == w.toSeq)
+    val (back, jobs) = countingJobs("weights-load")(LogisticRegression.loadWeights(spark, path))
+    val bits = (ws: Array[Double]) => ws.map(java.lang.Double.doubleToRawLongBits).toSeq
+    assert(bits(back) == bits(w))
+    assert(jobs == 1, s"loading a weight snapshot ran $jobs jobs")
   }
 }

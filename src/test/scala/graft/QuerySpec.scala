@@ -887,13 +887,7 @@ class QuerySpec extends SparkSpec {
     // 15 jobs: the query-row collect, the two concurrent arm actions and
     // their AQE stage jobs, and the final collect. The re-rank action's
     // thread inherits the caller's job group, so the group sees every job.
-    val sc = spark.sparkContext
-    sc.setJobGroup("q53-jobs", "q53 job accounting", interruptOnCancel = false)
-    try run() finally sc.clearJobGroup()
-    // the statusTracker fills asynchronously — poll until stable
-    def count: Int = sc.statusTracker.getJobIdsForGroup("q53-jobs").length
-    var last = -1; var jobs = count
-    while (jobs != last) { Thread.sleep(200); last = jobs; jobs = count }
+    val (_, jobs) = countingJobs("q53-jobs")(run())
     assert(jobs == 15, s"q53 ran $jobs jobs")
   }
 
