@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Cache hygiene for the query runners (SURVEY Y5 discipline: persist only
   * at real reuse points — and release at the end of the scope).
@@ -10,10 +13,31 @@ import org.apache.spark.sql.SparkSession
   * that single run: the runner calls [[clearAll]] after materializing each
   * query so no cached plan/RDD leaks into the next query (or, on a shared
   * cluster, the next job).
+  *
+  * The build rule: under AQE every scan of a persisted frame whose cache is
+  * not built yet becomes its own `TableCacheQueryStage`, and each of those
+  * stages submits a job over the same cache RDD — an unbuilt cache scanned
+  * k times in one plan costs k jobs, not 1. A shared intermediate (a frame
+  * one plan reads more than once) therefore goes through [[persistNow]],
+  * which builds the cache in one job before the plan reads it. A persist
+  * whose first reader is a driver-side action (a collected model, a round
+  * loop) needs no helper: that action builds it in one job.
   */
 object Caches {
+
+  /** Frames [[persistNow]] cached, keyed by session and the id of the RDD
+    * holding the cache — what [[clearCreatedSince]] uncaches. Cache
+    * records, not driver memos: [[clearAll]] drops its session's and
+    * stopped sessions' records, [[evictSession]] the session's.
+    */
+  private val built = TrieMap.empty[(SparkSession, Int), DataFrame]
+
+  private def dropBuilt(session: SparkSession => Boolean): Unit =
+    built.keysIterator.toList.foreach(k => if (session(k._1)) built.remove(k))
+
   def clearAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
+    dropBuilt(s => (s eq spark) || s.sparkContext.isStopped)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     // driver-memo hygiene: entries of STOPPED sessions can never be read
     // again — purge them here so the hook every runner already calls keeps
@@ -23,12 +47,33 @@ object Caches {
     graft.sources.SessionMemo.purgeStopped()
   }
 
+  /** Persist `df` at MEMORY_AND_DISK and build its cache now, in one job
+    * over the cache builder's RDD, so every later scan of it — however
+    * many a plan holds — finds the cache built and submits no job (the
+    * build rule above). An already built cache costs no job. Returns `df`.
+    */
+  def persistNow(df: DataFrame): DataFrame = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .foreach { cached =>
+        val builder = cached.cachedRepresentation.cacheBuilder
+        val buffers = builder.cachedColumnBuffers
+        if (!builder.isCachedColumnBuffersLoaded) buffers.foreachPartition(_ => ())
+        built.put((df.sparkSession, buffers.id), df)
+      }
+    df
+  }
+
   /** Session-close hook for embedders: drop every driver memo keyed by
     * `spark` (model artifacts, layout/plan handles — [[graft.sources.SessionMemo]]).
     * Call before `spark.stop()` when sessions churn in one JVM.
     */
-  def evictSession(spark: SparkSession): Unit =
+  def evictSession(spark: SparkSession): Unit = {
     graft.sources.SessionMemo.evictSession(spark)
+    dropBuilt(_ eq spark)
+  }
 
   /** Snapshot of the currently-persisted RDD ids — take one before a job,
     * pass it to [[clearCreatedSince]] after.
@@ -39,13 +84,21 @@ object Caches {
   /** Job-scoped release for SHARED long-lived sessions: unpersist only the
     * RDDs persisted after `before`, leaving caches owned by concurrent or
     * surrounding work untouched ([[clearAll]] would evict those too —
-    * recompute cost, not correctness). Storage for the job's DataFrame
-    * persists is freed here; their CacheManager plan entries are metadata
-    * only after the unpersist, and a dedicated CLI process should still
-    * finish with [[clearAll]].
+    * recompute cost, not correctness). Every frame [[persistNow]] cached
+    * after `before` is uncached as a Dataset, cache-manager entry
+    * included: an entry left behind would be returned by the next persist
+    * of the same plan and read through its old RDD lineage (the old file
+    * listing). Other DataFrame persists lose their storage here but keep
+    * their entry, so a dedicated CLI process should still finish with
+    * [[clearAll]].
     */
-  def clearCreatedSince(spark: SparkSession, before: Set[Int]): Unit =
+  def clearCreatedSince(spark: SparkSession, before: Set[Int]): Unit = {
+    built.keysIterator.toList.foreach { case k @ (s, id) =>
+      if ((s eq spark) && !before.contains(id))
+        built.remove(k).foreach(_.unpersist(blocking = true))
+    }
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!before.contains(id)) rdd.unpersist(blocking = true)
     }
+  }
 }

@@ -61,7 +61,8 @@ import org.apache.spark.sql.functions._
   * duplication in embedding-space, the paraphrase complement to
   * near_dedup's token-space pass); blocklist_filter = q94's C4-style
   * word filter (drop docs hitting a declared term blocklist,
-  * token-exact).
+  * token-exact); repetition_filter = q96's Gopher repetition rules (drop
+  * docs dominated by repeated n-grams — q96's keep side).
   *
   * Scale notes: every stage keeps its source operator's plan shape —
   * map-only where the operator is map-only (scrub, filters, sampling),
@@ -109,6 +110,7 @@ object CurationStages {
     "pq_encode" -> Set("embeddingCol"),
     "decontaminate" -> Set("holdoutSource", "minShared"),
     "blocklist_filter" -> Set("terms"),
+    "repetition_filter" -> Set.empty,
     "pii_scrub" -> Set.empty,
     "quality_filter" -> Set("minScore"),
     "char_concentration_filter" -> Set("maxConcentration"),
@@ -137,10 +139,11 @@ object CurationStages {
     * run eagerly over pairs derived from the flow), whiten (mean and
     * covariance passes), importance_resample and curriculum_order (their
     * LMs collect), temperature_mix (per-language counts collect),
-    * perplexity_filter with `order: 2` (the bigram scorer's driver-side
-    * table), assign_split with `splitFrom: flow` (components again) and
-    * bpe_annotate with `mergesFrom: flow` (the merge table learns on the
-    * driver). embed_near_dedup and semantic_dedup also run actions at
+    * perplexity_filter (order 1 builds the unigram scorer's tokenized
+    * corpus up front — [[graft.Caches.persistNow]]; order 2 collects the
+    * bigram scorer's driver-side table), assign_split with
+    * `splitFrom: flow` (components again) and bpe_annotate with
+    * `mergesFrom: flow` (the merge table learns on the driver). embed_near_dedup and semantic_dedup also run actions at
     * composition, but over the embeddings table only — never over the
     * flow — so they are not in the set. CurationSpec pins the set against
     * measured composition-time reads.
@@ -148,8 +151,8 @@ object CurationStages {
   private[graft] def readsInputAtComposition(stage: StageSpec): Boolean =
     stage.op match {
       case "near_dedup" | "image_near_dedup" | "whiten" |
-          "importance_resample" | "curriculum_order" | "temperature_mix" => true
-      case "perplexity_filter" => stage.int("order", 1) == 2
+          "importance_resample" | "curriculum_order" | "temperature_mix" |
+          "perplexity_filter" => true
       case "assign_split" => stage.strOr("splitFrom", "flow") == "flow"
       case "bpe_annotate" => stage.strOr("mergesFrom", "flow") == "flow"
       case _ => false

@@ -71,11 +71,10 @@ object DedupOps {
     // signature, the set sizes AND the exact verify (array_intersect) with
     // ZERO shuffles — the shingle relation never leaves its scan tasks
     // (earlier formulations paid a dedup exchange plus a doc_id groupBy)
-    val fps = docs
+    val fps = graft.Caches.persistNow(docs
       .select(col("doc_id"), sort_array(array_distinct(
         org.apache.spark.sql.graft.TextExpressions
-          .shingle_hashes(tokens("text")))).as("fps"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .shingle_hashes(tokens("text")))).as("fps")))
     // native MinHashSignature: one tight loop per doc instead of
     // |shingles| × 16 interpreted lambda evaluations; same (a·h+b) mod p
     // minima as the oracle's comprehension.
@@ -247,9 +246,8 @@ object DedupOps {
     // signature pair, so no final dedup pass is needed.
     val sig = Tables(s, dir, "documents")
       .select(col("doc_id"), simhash32(token_hashes(tokens("text"))).as("simhash"))
-    val clusters = sig.groupBy("simhash")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val clusters = graft.Caches.persistNow(sig.groupBy("simhash")
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds")))
     val bands = clusters
       .select(col("simhash"), col("ds"), explode(sequence(lit(0), lit(19))).as("band"))
       .withColumn("bh", expr(bhExpr(sparkAt, sparkShr, "band+1")))
@@ -1055,14 +1053,14 @@ object DedupOps {
       .filter(pmod(col("simhash"), lit(mcal)) === 0)
   }
 
-  /** Stage 2: exact-signature clustering (persisted — feeds both the
-    * banding join and the intra-cluster expansion within one execution).
+  /** Stage 2: exact-signature clustering (persisted and built up front by
+    * [[graft.Caches.persistNow]] — feeds both the banding join and the
+    * intra-cluster expansion within one execution).
     */
   private[graft] def q107Clusters(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    q107Sig(s, dir).groupBy("simhash")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.Caches.persistNow(q107Sig(s, dir).groupBy("simhash")
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds")))
 
   /** Stage 3: 20-band self-join to DISTINCT candidate signature pairs. */
   private def q107SigPairsFrom(clusters: org.apache.spark.sql.DataFrame)

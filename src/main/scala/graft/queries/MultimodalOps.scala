@@ -154,9 +154,8 @@ object MultimodalOps {
     */
   private[graft] def dhashNearDupPairs(sig: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val clusters = sig.groupBy("hi", "lo")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val clusters = graft.Caches.persistNow(sig.groupBy("hi", "lo")
+      .agg(sort_array(collect_list(col("doc_id"))).as("ds")))
     val bands = clusters
       .select(col("hi"), col("lo"), col("ds"),
         explode(sequence(lit(0), lit(3))).as("band"))

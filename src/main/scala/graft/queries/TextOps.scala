@@ -341,8 +341,7 @@ object TextOps {
     */
   private[graft] def pairsFromPostings(capped: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val postings = capped
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val postings = graft.Caches.persistNow(capped)
     val pairs = postings
       .filter(size(col("ds")) >= 2)
       .select(explode(expr(
@@ -847,10 +846,10 @@ object TextOps {
     val V = vocabSize
     // Tokenized corpus feeds three branches (vocab count, total, scoring)
     // — a real reuse point (Y5): without the persist every branch re-runs
-    // tokenize over the raw corpus. Scope = one query run; the runner's
-    // Caches.clearAll releases it.
-    val f = tokenizedNonEmpty(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // tokenize over the raw corpus, and built up front (Caches.persistNow)
+    // the branches' scans submit no job each. Scope = one query run; the
+    // runner's Caches.clearAll releases it.
+    val f = graft.Caches.persistNow(tokenizedNonEmpty(docs))
     nllScore(f.crossJoin(broadcast(pplDimsFrom(f, V))), V)
   }
 
@@ -958,16 +957,16 @@ object TextOps {
          |FROM sc2, thr
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.graft.PercentileLong.percentile_long
-      // scored feeds TWO jobs — the broadcast threshold aggregate and the
-      // final projection — and its lineage is the whole scoring pipeline
-      // (tokenize + vocab shuffle + V array passes). Persist the 5-column
-      // result (score-quantized longs, corpus-row cardinality) so the
-      // pipeline runs once; released by the runner's Caches.clearAll.
-      val scored = perplexityScored(Tables(s, dir, "documents"), V)
+      // scored is read twice — by the broadcast threshold aggregate and by
+      // the final projection — and its lineage is the whole scoring
+      // pipeline (tokenize + vocab shuffle + V array passes). The 5-column
+      // result (score-quantized longs, corpus-row cardinality) is built
+      // once up front (Caches.persistNow: an unbuilt cache would cost one
+      // job per read); released by the runner's Caches.clearAll.
+      val scored = graft.Caches.persistNow(perplexityScored(Tables(s, dir, "documents"), V)
         .select(col("doc_id"), col("n_tokens"), col("oov"),
           floor(col("nll_raw") * lit(1000000L) + lit(0.5)).cast("long").as("nll_n6"),
-          floor(col("nll_raw") * lit(1000L) + lit(0.5)).cast("long").as("nll_n3"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          floor(col("nll_raw") * lit(1000L) + lit(0.5)).cast("long").as("nll_n3")))
       val thr = scored.agg(
         percentile_long(col("nll_n3"), 0.25).as("p25"),
         percentile_long(col("nll_n3"), 0.75).as("p75"))
@@ -1115,8 +1114,7 @@ object TextOps {
          |LIMIT 20""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.graft.TextExpressions.{bigram_nll, class_seq}
-      val f1 = tokenizedNonEmpty(Tables(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val f1 = graft.Caches.persistNow(tokenizedNonEmpty(Tables(s, dir, "documents")))
       val dims = pplDimsFrom(f1, V)
       val (vw2, cu2, _, cb2) = graft.sources.BigramLm.model(s, dir)
       val both = nllScore(

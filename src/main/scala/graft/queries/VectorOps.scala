@@ -1882,15 +1882,16 @@ object VectorOps {
         .cast(DoubleType) / count(lit(1))).as("m"))
     // the |labels|-row centroid table persists so the corpus pass behind
     // it runs ONCE — AQE does not deduplicate the self-join's repeated
-    // subtree (measured: 3 corpus scans without this, PlanSpec-pinned).
+    // subtree (measured: 3 corpus scans without this, PlanSpec-pinned) —
+    // and is built before the self-join reads it (Caches.persistNow: each
+    // side's scan of an unbuilt cache would submit its own job).
     // A derived aggregate, not a bare scan, so the persist cannot be
     // cache-substituted into unrelated reads (the importance_resample
     // lesson); released by the suite-level cache sweep like q31's fps.
-    val cent = cells
+    val cent = graft.Caches.persistNow(cells
       .groupBy("label")
       .agg(expr("transform(sort_array(collect_list(struct(idx, m))), x -> x.m)")
-        .as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .as("c")))
     // sequential fold ≡ the oracle's list_dot_product over identical doubles
     def sdot(x: String, y: String): org.apache.spark.sql.Column =
       expr(s"aggregate(zip_with($x, $y, (p, q) -> p * q), 0D, (acc, v) -> acc + v)")

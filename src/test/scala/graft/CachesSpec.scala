@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The scoped cache-release contract behind curate jobs in shared sessions
@@ -34,5 +35,33 @@ class CachesSpec extends SparkSpec {
     // function itself is clearing pre-snapshot ids
     assert((1 to 5).exists(_ => attempt()),
       "pre-snapshot cache evicted in 5/5 attempts — scoped release broken")
+  }
+
+  test("clearCreatedSince uncaches a frame persistNow cached after the snapshot") {
+    // a plan no other suite persists; only this frame is asserted on
+    val df = spark.range(0, 97, 1, 3).withColumn("cachesSpec", col("id") * 3)
+    val before = Caches.snapshot(spark)
+    Caches.persistNow(df)
+    Caches.clearCreatedSince(spark, before)
+    // an RDD-only release leaves the cache-manager entry, which still
+    // reports the frame's storage level
+    assert(df.storageLevel == StorageLevel.NONE,
+      "clearCreatedSince left the frame's cache-manager entry behind")
+  }
+
+  test("a frame one plan scans twice: a plain persist builds it twice, persistNow once") {
+    // the rule in Caches' scaladoc: each scan of an unbuilt cache is its
+    // own AQE query stage with its own job over the cache RDD
+    def buildJobs(tag: String)(persist: org.apache.spark.sql.DataFrame => Unit): Seq[Int] = {
+      val df = spark.range(0, 200, 1, 4)
+        .groupBy((col("id") % 11).as("k")).agg(count(lit(1)).as(tag))
+      try countingCacheBuilds(s"caches-spec-$tag") {
+        persist(df)
+        df.as("a").join(df.as("b"), "k").write.format("noop").mode("overwrite").save()
+      }._3.values.toSeq
+      finally df.unpersist(blocking = true)
+    }
+    assert(buildJobs("plain")(_.persist(StorageLevel.MEMORY_AND_DISK)) == Seq(2))
+    assert(buildJobs("now")(Caches.persistNow) == Seq(1))
   }
 }

@@ -404,15 +404,15 @@ class CurationSpec extends SparkSpec {
       StageSpec("curriculum_order") -> docs,
       StageSpec("temperature_mix", Map("budgetDocs" -> 200.0)) -> docs,
       StageSpec("perplexity_filter", Map("order" -> 2.0)) -> docs,
+      StageSpec("perplexity_filter") -> docs,
       StageSpec("assign_split") -> docs,
       StageSpec("bpe_annotate") -> docs,
       StageSpec("exact_dedup") -> docs,
       StageSpec("embed_near_dedup", Map("minDot" -> 0.45)) -> docs,
       StageSpec("semantic_dedup", Map("clusters" -> 8.0)) -> docs,
-      StageSpec("perplexity_filter") -> docs,
       StageSpec("assign_split", Map("splitFrom" -> "corpus")) -> docs,
       StageSpec("bpe_annotate", Map("mergesFrom" -> "corpus")) -> docs)
-    assert(variants.count(v => CurationStages.readsInputAtComposition(v._1)) == 9)
+    assert(variants.count(v => CurationStages.readsInputAtComposition(v._1)) == 10)
     variants.foreach { case (st, raw) =>
       val input = raw.filter(tick(col("doc_id")))
       // ticks of one full scan (the filter may be inferred onto both
@@ -432,5 +432,17 @@ class CurationSpec extends SparkSpec {
         assert(onePass > 0 && atComposition == onePass && total == onePass, what)
       else assert(atComposition == 0, what)
     }
+  }
+
+  test("a near_dedup chain builds each cache it reads in one job") {
+    import graft.jobs.{CurationStages, StageSpec}
+    val docs = Tables(spark, sf, "documents")
+    val before = Caches.snapshot(spark)
+    val (_, _, builds) = try countingCacheBuilds("near-dedup-cache-builds") {
+      CurationStages.run(docs, Seq(StageSpec("near_dedup", Map("threshold" -> 0.5)))) {
+        _.write.format("noop").mode("overwrite").save()
+      }
+    } finally Caches.clearCreatedSince(spark, before)
+    assert(builds.nonEmpty && builds.values.forall(_ == 1), s"jobs per cached RDD: $builds")
   }
 }

@@ -910,4 +910,24 @@ class QuerySpec extends SparkSpec {
     try assert(queries.VectorOps.q53AnnRecall.fn(spark, dir).collect().isEmpty)
     finally Caches.clearAll(spark)
   }
+
+  test("shared intermediates are built by one job each; q21, q31 and q71 job counts") {
+    // the queries whose plan reads a persisted frame more than once: with
+    // the cache built up front (Caches.persistNow) no scan of it submits
+    // a job of its own
+    val shared = Seq("q21_ngram_jaccard", "q31_minhash_lsh", "q39_simhash_neardup",
+      "q66_perplexity", "q71_image_neardup", "q103_label_centroid_matrix",
+      "q107_simhash_calibration", "q119_lm_disagreement")
+    val jobs = shared.map { name =>
+      val (_, n, builds) = countingCacheBuilds(s"shared-cache-$name") {
+        try SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
+        finally Caches.clearAll(spark)
+      }
+      assert(builds.nonEmpty && builds.values.forall(_ == 1),
+        s"$name: jobs per cached RDD $builds")
+      name -> n
+    }.toMap
+    assert(Seq("q21_ngram_jaccard", "q31_minhash_lsh", "q71_image_neardup").map(jobs) ==
+      Seq(11, 8, 6), s"job counts moved: $jobs")
+  }
 }

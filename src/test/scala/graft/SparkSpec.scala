@@ -24,6 +24,38 @@ trait SparkSpec extends AnyFunSuite {
     while (jobs != last) { Thread.sleep(200); last = jobs; jobs = count }
     (out, jobs)
   }
+
+  /** [[countingJobs]] plus, for each persisted RDD, the number of the
+    * group's jobs whose final RDD it is: a cache built in one job maps to
+    * 1, while an unbuilt cache that one plan scans k times maps to k (AQE
+    * submits a job per `TableCacheQueryStage`). The listener bus delivers
+    * job starts asynchronously, so it is polled until it has seen every
+    * job the status tracker counted.
+    */
+  def countingCacheBuilds[T](group: String)(body: => T): (T, Int, Map[Int, Int]) = {
+    val finals = new java.util.concurrent.ConcurrentHashMap[Int, Option[Int]]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          // the result stage is created after its parents (highest id);
+          // its first RDD info is the stage's own, the job's final RDD
+          val last = e.stageInfos.maxBy(_.stageId).rddInfos.head
+          finals.put(e.jobId, Option.when(last.storageLevel.isValid)(last.id))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val (out, jobs) = countingJobs(group)(body)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (finals.size < jobs && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(finals.size == jobs, s"listener saw ${finals.size} of $jobs jobs in $group")
+      import scala.jdk.CollectionConverters._
+      val builds = finals.values.asScala.toSeq.flatten
+        .groupBy(identity).map { case (id, js) => id -> js.size }
+      (out, jobs, builds)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
