@@ -3,6 +3,7 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.storage.StorageLevel
 
 /** Cache hygiene for the query runners (SURVEY Y5 discipline: persist only
@@ -51,18 +52,29 @@ object Caches {
     * over the cache builder's RDD, so every later scan of it — however
     * many a plan holds — finds the cache built and submits no job (the
     * build rule above). An already built cache costs no job. Returns `df`.
+    *
+    * The build is eager: a caller that goes through here runs Spark jobs
+    * while it CONSTRUCTS its frame (q21's postings, q31, q39, q66, q71,
+    * q103, q107, q119, the PairGraph layout, and the near_dedup,
+    * image_near_dedup and perplexity_filter stages while a chain is
+    * composed), so a plan-only caller — `explain`, PlanDump,
+    * tools.PlanFiles — pays for those builds too. The build's tasks see
+    * the session's SQL conf, as the tasks of a query's own cache-stage job
+    * do.
     */
   def persistNow(df: DataFrame): DataFrame = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    spark.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-      .foreach { cached =>
-        val builder = cached.cachedRepresentation.cacheBuilder
-        val buffers = builder.cachedColumnBuffers
-        if (!builder.isCachedColumnBuffersLoaded) buffers.foreachPartition(_ => ())
-        built.put((df.sparkSession, buffers.id), df)
-      }
+    SQLExecution.withSQLConfPropagated(spark) {
+      spark.sharedState.cacheManager
+        .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .foreach { cached =>
+          val builder = cached.cachedRepresentation.cacheBuilder
+          val buffers = builder.cachedColumnBuffers
+          if (!builder.isCachedColumnBuffersLoaded) buffers.foreachPartition(_ => ())
+          built.put((df.sparkSession, buffers.id), df)
+        }
+    }
     df
   }
 

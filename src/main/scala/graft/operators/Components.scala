@@ -272,17 +272,18 @@ object Components {
   /** The non-canonical member set of a labeled (id, component) relation
     * under a keep policy — shared by [[canonicalize]] (live components)
     * and the layout-consuming queries (stamped ClusterAssignment labels,
-    * q63/q114). keep-min is a component-keyed argmin group; keep-best is
-    * a row_number window over the labeled slice (tiny: docs-in-pairs
-    * rows, never corpus-keyed — q113's plan shape).
+    * q63/q114). keep-min keeps the member whose id IS the label (labels
+    * are the component's minimum id, see [[connectedComponents]]): a
+    * filter, not an argmin group joined back to the labels, whose two
+    * shuffles made AQE's broadcast-or-shuffle choice for the caller's
+    * anti join hang on which stage finished first; keep-best is a
+    * row_number window over the labeled slice (tiny: docs-in-pairs rows,
+    * never corpus-keyed — q113's plan shape).
     */
   private[graft] def dropSet(comp: DataFrame,
       keepScores: Option[DataFrame]): DataFrame = keepScores match {
     case None =>
-      val canonical = comp.groupBy("component").agg(min(col("id")).as("keep"))
-      comp.join(canonical, "component")
-        .filter(col("id") =!= col("keep"))
-        .select(col("id"))
+      comp.filter(col("id") =!= col("component")).select(col("id"))
     case Some(sc) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("component")

@@ -206,6 +206,14 @@ class OperatorUtilSpec extends SparkSpec {
     val survivors = canon.select(col("doc_id").as("a"))
     assert(realPairs.join(survivors, "a")
       .join(canon.select(col("doc_id").as("b")), "b").isEmpty)
+    // keep-min filters on the labels' own rule (a component is labeled
+    // with its minimum id): the same drop set as the argmin group joined
+    // back to the labels
+    val comp = Components.connectedComponents(realPairs)
+    val argmin = comp.join(comp.groupBy("component").agg(min(col("id")).as("keep")), "component")
+      .filter(col("id") =!= col("keep")).select("id")
+    val drop = Components.dropSet(comp, None)
+    assert(!drop.isEmpty && drop.exceptAll(argmin).isEmpty && argmin.exceptAll(drop).isEmpty)
   }
 
   test("salted join equals the plain join on skewed keys and shuffles on (key, salt)") {
