@@ -22,23 +22,25 @@ import org.apache.spark.storage.StorageLevel
   * one plan reads more than once) therefore goes through [[persistNow]],
   * which builds the cache in one job before the plan reads it. A persist
   * whose first reader is a driver-side action (a collected model, a round
-  * loop) needs no helper: that action builds it in one job.
+  * loop) needs no early build: that action builds it in one job. One that
+  * outlives its query (a stage's frame inside a `-curate` chain) goes
+  * through [[persist]], so the job's [[clearCreatedSince]] uncaches it.
   */
 object Caches {
 
-  /** Frames [[persistNow]] cached, keyed by session and the id of the RDD
-    * holding the cache — what [[clearCreatedSince]] uncaches. Cache
-    * records, not driver memos: [[clearAll]] drops its session's and
-    * stopped sessions' records, [[evictSession]] the session's.
+  /** Frames [[persist]] (and so [[persistNow]]) cached, by identity —
+    * what [[clearCreatedSince]] uncaches. Cache records, not driver memos:
+    * [[clearAll]] drops its session's and stopped sessions' records,
+    * [[evictSession]] the session's.
     */
-  private val built = TrieMap.empty[(SparkSession, Int), DataFrame]
+  private val recorded = TrieMap.empty[DataFrame, Unit]
 
-  private def dropBuilt(session: SparkSession => Boolean): Unit =
-    built.keysIterator.toList.foreach(k => if (session(k._1)) built.remove(k))
+  private def dropRecorded(session: SparkSession => Boolean): Unit =
+    recorded.keysIterator.toList.foreach(df => if (session(df.sparkSession)) recorded.remove(df))
 
   def clearAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    dropBuilt(s => (s eq spark) || s.sparkContext.isStopped)
+    dropRecorded(s => (s eq spark) || s.sparkContext.isStopped)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     // driver-memo hygiene: entries of STOPPED sessions can never be read
     // again — purge them here so the hook every runner already calls keeps
@@ -63,20 +65,33 @@ object Caches {
     * do.
     */
   def persistNow(df: DataFrame): DataFrame = {
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    SQLExecution.withSQLConfPropagated(spark) {
-      spark.sharedState.cacheManager
-        .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-        .foreach { cached =>
-          val builder = cached.cachedRepresentation.cacheBuilder
-          val buffers = builder.cachedColumnBuffers
-          if (!builder.isCachedColumnBuffersLoaded) buffers.foreachPartition(_ => ())
-          built.put((df.sparkSession, buffers.id), df)
-        }
+    persist(df)
+    SQLExecution.withSQLConfPropagated(classic(df.sparkSession)) {
+      cacheBuilder(df).foreach { builder =>
+        if (!builder.isCachedColumnBuffersLoaded) builder.cachedColumnBuffers.foreachPartition(_ => ())
+      }
     }
     df
   }
+
+  /** Persist `df` at MEMORY_AND_DISK, recorded for [[clearCreatedSince]],
+    * and leave the build to its first reader: for a frame whose first
+    * reader is a driver-side action (a collected model), which builds it
+    * in one job. Returns `df`.
+    */
+  def persist(df: DataFrame): DataFrame = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    recorded.put(df, ())
+    df
+  }
+
+  private def classic(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  private def cacheBuilder(df: DataFrame) =
+    classic(df.sparkSession).sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
 
   /** Session-close hook for embedders: drop every driver memo keyed by
     * `spark` (model artifacts, layout/plan handles — [[graft.sources.SessionMemo]]).
@@ -84,7 +99,7 @@ object Caches {
     */
   def evictSession(spark: SparkSession): Unit = {
     graft.sources.SessionMemo.evictSession(spark)
-    dropBuilt(_ eq spark)
+    dropRecorded(_ eq spark)
   }
 
   /** Snapshot of the currently-persisted RDD ids — take one before a job,
@@ -96,18 +111,25 @@ object Caches {
   /** Job-scoped release for SHARED long-lived sessions: unpersist only the
     * RDDs persisted after `before`, leaving caches owned by concurrent or
     * surrounding work untouched ([[clearAll]] would evict those too —
-    * recompute cost, not correctness). Every frame [[persistNow]] cached
-    * after `before` is uncached as a Dataset, cache-manager entry
-    * included: an entry left behind would be returned by the next persist
+    * recompute cost, not correctness). Every frame [[persist]] recorded
+    * whose cache was not built before `before` is uncached as a Dataset,
+    * cache-manager entry included — one never built too, as it holds no
+    * blocks: an entry left behind would be returned by the next persist
     * of the same plan and read through its old RDD lineage (the old file
     * listing). Other DataFrame persists lose their storage here but keep
     * their entry, so a dedicated CLI process should still finish with
     * [[clearAll]].
     */
   def clearCreatedSince(spark: SparkSession, before: Set[Int]): Unit = {
-    built.keysIterator.toList.foreach { case k @ (s, id) =>
-      if ((s eq spark) && !before.contains(id))
-        built.remove(k).foreach(_.unpersist(blocking = true))
+    recorded.keysIterator.toList.foreach { df =>
+      if (df.sparkSession eq spark) {
+        val built = cacheBuilder(df).filter(_.isCachedColumnBuffersLoaded)
+          .map(_.cachedColumnBuffers.id)
+        if (!built.exists(before.contains)) {
+          recorded.remove(df)
+          df.unpersist(blocking = true)
+        }
+      }
     }
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!before.contains(id)) rdd.unpersist(blocking = true)

@@ -10,6 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "input DataFrame format is configurable, default parquet") without the
   * prototxt indirection: the format is parquet, the path is `dir/name.parquet`,
   * and Catalyst sees a plain relation so pushdown/pruning stay automatic.
+  * Reads are footer-typed ([[graft.sources.Parquet]]): the schema Spark
+  * would infer is read from one footer on the driver and declared, so a
+  * load runs no schema-inference job.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -36,7 +39,7 @@ object Tables {
     // matches DuckDB's naive-timestamp reading of the same file.
     if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = graft.sources.Parquet.read(spark, s"$dir/$name.parquet")
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       df.schema.find(_.name == "ts").map(_.dataType) match {
@@ -48,6 +51,6 @@ object Tables {
           df.withColumn("ts", col("ts").cast(TimestampType))
         case _ => df
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else graft.sources.Parquet.read(spark, s"$dir/$name.parquet")
   }
 }

@@ -253,7 +253,7 @@ object CurationStages {
       val dim = stage.int("dim", 64)
       val bands = stage.int("bands", 4)
       val minDot = stage.dbl("minDot", 0.25)
-      val emb = docs.sparkSession.read.parquet(embPath)
+      val emb = graft.sources.Parquet.read(docs.sparkSession, embPath)
         .select(col(idCol).as("vec_id"), col(embCol).as("embedding"))
       // derived bits respect the 63-bit long budget for any declared band
       // count (JobConfig validates declared geometry; derived geometry
@@ -308,7 +308,7 @@ object CurationStages {
       val embCol = stage.strOr("embeddingCol", "embedding")
       val tau = stage.dbl("minDot", 0.25)
       import graft.ml.KMeans
-      val emb = docs.sparkSession.read.parquet(embPath)
+      val emb = graft.sources.Parquet.read(docs.sparkSession, embPath)
         .select(col(idCol).as("vec_id"), col(embCol).as("embedding"),
           lit(0).as("label"))
       // `clusters` pins an operating point; the default SIZES the codebook
@@ -359,7 +359,7 @@ object CurationStages {
       val idCol = stage.strOr("idCol", "vec_id")
       val embCol = stage.strOr("embeddingCol", "embedding")
       val how = stage.strOr("how", "inner")
-      val media = docs.sparkSession.read.parquet(embPath)
+      val media = graft.sources.Parquet.read(docs.sparkSession, embPath)
         .select(col(idCol).as("doc_id"), col(embCol).as("embedding"))
       docs.join(if (stage.bool("broadcast", false)) broadcast(media) else media,
         Seq("doc_id"), how)

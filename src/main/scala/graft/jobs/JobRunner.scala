@@ -108,8 +108,12 @@ object JobRunner {
       s"$msg\nusage: JobRunner (-train|-features|-test|-curate)+ -conf job.json " +
         "[-model path] [-output path] [-outputFormat json|parquet|csv]")
 
+  /** A declared source; parquet goes through the footer-typed read
+    * ([[graft.sources.Parquet]]), which runs no schema-inference job.
+    */
   private def readSource(spark: SparkSession, s: SourceSpec): DataFrame =
-    spark.read.format(s.format).load(s.dataPath)
+    if (s.format == "parquet") graft.sources.Parquet.read(spark, s.dataPath)
+    else spark.read.format(s.format).load(s.dataPath)
 
   /** Where a computed corpus mean persists, next to the model weights —
     * the compute_image_mean blob of the declared transform.
@@ -220,7 +224,7 @@ object JobRunner {
       // discipline; the dedicated CLI entrypoint still clearAll's at
       // process end in main()).
       val before = graft.Caches.snapshot(spark)
-      try CurationStages.run(spark.read.format(src.format).load(src.dataPath),
+      try CurationStages.run(readSource(spark, src),
           cfg.stages, embeddingsDefault = embDefault,
           sourceDirDefault = if (src.table.nonEmpty) Some(src.path) else None) {
         _.write.mode("overwrite").format(cfg.outputFormat).save(s"${cfg.output}/corpus")

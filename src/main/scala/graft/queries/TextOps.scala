@@ -1248,10 +1248,9 @@ object TextOps {
     val C = V + 1
     // one persisted tokenized frame feeds the vocab action, the pair
     // pass, and the scoring pass (q66's reuse discipline — released by
-    // the runner's Caches.clearAll)
-    val f = tokenizedNonEmpty(docs)
-      .filter(col("dl") >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the runner's Caches.clearAll, or a -curate job's clearCreatedSince);
+    // the model's first collect builds it
+    val f = graft.Caches.persist(tokenizedNonEmpty(docs).filter(col("dl") >= 2))
     // the model collects driver-side ([[bigramModel]]'s two bounded
     // actions — the PqCodebooks discipline) and rides as literals; the
     // scoring pass is then a PURE MAP over the persisted frame through
@@ -1280,9 +1279,7 @@ object TextOps {
     import org.apache.spark.sql.graft.TextExpressions.{bigram_nll, class_seq}
     val spark = docs.sparkSession
     import spark.implicits._
-    val f = tokenizedNonEmpty(docs)
-      .filter(col("dl") >= 2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = graft.Caches.persist(tokenizedNonEmpty(docs).filter(col("dl") >= 2))
     val (vw, cu, _, cb) = bigramModelFrom(f, V)
     val model = Seq((vw, cu, cb)).toDF("__vw", "__cu", "__cb")
     f.crossJoin(broadcast(model))

@@ -119,7 +119,7 @@ object DerivedLayout {
       }
       pruneStaleSiblings(targetPath)
     }
-    spark.read.parquet(target)
+    Parquet.read(spark, target)
   }
 
   /** Remove older layouts of the SAME source (different stamp) and any

@@ -41,12 +41,13 @@ object EventStreams {
     // A streaming reader needs a declared schema, but the events generator
     // has shipped two physical ts encodings over time: TIMESTAMP(NANOS)
     // (surfaces as long via nanosAsLong) and TIMESTAMP(MICROS) ntz. Probe
-    // the actual footer with a one-off batch read — driver-side, metadata
-    // only — and declare + normalize accordingly, mirroring graft.Tables.
+    // the actual footer with a footer-typed batch read — driver-side,
+    // metadata only, no Spark job — and declare + normalize accordingly,
+    // mirroring graft.Tables.
     // The probe throws on a directory with no files yet (a streaming
     // source may legitimately start EMPTY and fill later): fall back to
     // the raw LongType declaration the pre-probe reader used.
-    val physicalTs = scala.util.Try(spark.read.parquet(path).schema)
+    val physicalTs = scala.util.Try(graft.sources.Parquet.read(spark, path).schema)
       .toOption.flatMap(_.find(_.name == "ts").map(_.dataType))
       .getOrElse(LongType)
     val schema = StructType(rawSchema.map(f =>

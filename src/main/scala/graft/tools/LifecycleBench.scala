@@ -111,12 +111,12 @@ object LifecycleBench {
     val wall = (System.nanoTime() - wall0) / 1e9
 
     // sanity: the chain actually produced its artifacts
-    val curated = spark.read.parquet(s"$work/curated/corpus")
+    val curated = graft.sources.Parquet.read(spark, s"$work/curated/corpus")
     require(curated.count() > 0 && curated.columns.contains("pq_code"),
       s"curated corpus malformed: ${curated.columns.mkString(",")}")
     require(graft.ml.LogisticRegression.loadWeights(spark, s"$work/model")
       .exists(_ != 0d), "model snapshot missing or zero")
-    require(spark.read.parquet(s"$work/ml_out/features").count() > 0)
+    require(graft.sources.Parquet.read(spark, s"$work/ml_out/features").count() > 0)
 
     val stages = times.map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")
     println(f"""{"metric":"lifecycle_e2e","sf":"$sfDir",""" +

@@ -56,7 +56,7 @@ object RefreshProbe {
     val v3 = corpusDir("v3", None)          // refreshed from refreshed v2
     val v2s = corpusDir("v2s", Some(cut90)) // scratch twins (distinct stamps)
     val v3s = corpusDir("v3s", None)
-    def n(d: String) = spark.read.parquet(s"$d/documents.parquet").count()
+    def n(d: String) = graft.sources.Parquet.read(spark, s"$d/documents.parquet").count()
     println(s"[refresh] corpus v1=${n(v1)} v2=${n(v2)} v3=${n(v3)} docs")
 
     def time[A](label: String)(f: => A): A = {

@@ -49,6 +49,17 @@ class CachesSpec extends SparkSpec {
       "clearCreatedSince left the frame's cache-manager entry behind")
   }
 
+  test("Caches.persist builds nothing; clearCreatedSince uncaches what a reader built after the snapshot") {
+    val df = spark.range(0, 89, 1, 3).withColumn("cachesSpecLazy", col("id") * 5)
+    val before = Caches.snapshot(spark)
+    assert(countingJobs("caches-spec-lazy")(Caches.persist(df))._2 == 0)
+    df.collect()
+    assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    Caches.clearCreatedSince(spark, before)
+    assert(df.storageLevel == StorageLevel.NONE,
+      "clearCreatedSince left a recorded frame's cache-manager entry behind")
+  }
+
   test("a frame one plan scans twice: a plain persist builds it twice, persistNow once") {
     // the rule in Caches' scaladoc: each scan of an unbuilt cache is its
     // own AQE query stage with its own job over the cache RDD

@@ -392,8 +392,8 @@ class JobRunnerSpec extends SparkSpec {
   test("lifecycle job counts per mode are pinned on the perfbench chain") {
     // at this size each Spark job costs ~25-80 ms, so a redundant action —
     // a curate stage re-running its upstream chain, a schema-inference
-    // read of a snapshot, a separate count before the gradient loop, one
-    // aggregation pass per test blob — is the cost. The chain and the ML
+    // read of a snapshot or a source, a separate count before the gradient
+    // loop, one aggregation pass per test blob — is the cost. The chain and the ML
     // job are perfbench's lifecycle workload (perfbench/src/perfbench/
     // Main.scala), here over sf0.001 with the vec_id % 10 == 1 holdout.
     val work = java.nio.file.Files.createTempDirectory("joblife").toString
@@ -435,8 +435,11 @@ class JobRunnerSpec extends SparkSpec {
     // stage timing); train: one job per gradient step and
     // per validation pass plus the writes, no separate count; features
     // and test: ONE job to load the weights, and test aggregates both
-    // blobs in one pass
-    assert(jobs == Seq("curate" -> 24, "train" -> 26, "features" -> 3, "test" -> 4),
+    // blobs in one pass; every mode: its parquet sources (curate's
+    // documents and multimodal_join's embeddings, train's and validation's
+    // snapshots, the features and test source) are read footer-typed, with
+    // no schema-inference job
+    assert(jobs == Seq("curate" -> 22, "train" -> 24, "features" -> 2, "test" -> 3),
       s"lifecycle jobs per mode moved: $jobs")
   }
 
@@ -469,12 +472,16 @@ class JobRunnerSpec extends SparkSpec {
       "the curate job left persisted RDDs behind")
   }
 
-  test("two -curate runs with near_dedup in one session: the second reads its source afresh") {
-    // the first run's shared intermediates (q21's postings) must leave the
-    // cache manager with the job: an entry left behind is returned by the
-    // second run's persist of the same plan and read through the first
-    // run's lineage, which holds the old file listing
-    val work = java.nio.file.Files.createTempDirectory("jobrerun").toString
+  /** Two identical `-curate` runs of `stages` over one path write the same
+    * corpus, and a third over the same path with its files replaced
+    * outside Spark (a Spark write would refresh cache entries over the
+    * path) sees only the new files. A frame a stage persists must leave
+    * the cache manager with the job: an entry left behind is returned by
+    * the next run's persist of the same plan and read through the first
+    * run's lineage, which holds the old file listing.
+    */
+  private def assertRerunReadsAfresh(tag: String, stages: String): Unit = {
+    val work = java.nio.file.Files.createTempDirectory(s"jobrerun-$tag").toString
     val docs = Tables(spark, sf, "documents")
     def stage(dir: String, rows: org.apache.spark.sql.DataFrame): Unit =
       rows.write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -482,7 +489,7 @@ class JobRunnerSpec extends SparkSpec {
       val conf = writeConf(
         s"""{"source": {"path": "$dir", "table": "documents", "idCol": "doc_id"},
            |"output": "$out", "outputFormat": "parquet",
-           |"stages": [{"op": "near_dedup", "threshold": 0.5}]}""".stripMargin)
+           |"stages": $stages}""".stripMargin)
       JobRunner.run(spark, JobRunner.parse(Array("-curate", "-conf", conf)))
       spark.read.parquet(s"$out/corpus")
     }
@@ -491,9 +498,6 @@ class JobRunnerSpec extends SparkSpec {
     val again = curate(s"$work/a", s"$work/out1b")
     assert(first.exceptAll(again).isEmpty && again.exceptAll(first).isEmpty,
       "two identical -curate runs wrote different corpora")
-    // the same path, its files replaced outside Spark (a Spark write
-    // would refresh cache entries over the path): the run must see only
-    // the new files
     stage(s"$work/b", docs.filter(col("doc_id") % 2 === 0))
     val (from, to) = (java.nio.file.Paths.get(s"$work/b/documents.parquet"),
       java.nio.file.Paths.get(s"$work/a/documents.parquet"))
@@ -506,6 +510,17 @@ class JobRunnerSpec extends SparkSpec {
     val fresh = curate(s"$work/b", s"$work/out3")
     assert(rewritten.count() == fresh.count() && rewritten.exceptAll(fresh).isEmpty,
       "a -curate over a rewritten source read the earlier run's cache")
+  }
+
+  test("two -curate runs with near_dedup in one session: the second reads its source afresh") {
+    // q21's postings, built by Caches.persistNow
+    assertRerunReadsAfresh("near", """[{"op": "near_dedup", "threshold": 0.5}]""")
+  }
+
+  test("two -curate runs with a bigram perplexity_filter: the second reads its source afresh") {
+    // q118's tokenized frame, persisted by Caches.persist and built by the
+    // bigram model's first collect
+    assertRerunReadsAfresh("ppl2", """[{"op": "perplexity_filter", "order": 2}]""")
   }
 
   test("repetition_filter is a declared op: parsed from JSON and run by -curate") {
