@@ -38,8 +38,7 @@ object Tables {
     // UTC by every entrypoint, so the NTZ cast is instant-preserving and
     // matches DuckDB's naive-timestamp reading of the same file.
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = graft.sources.Parquet.read(spark, s"$dir/$name.parquet")
+      val df = graft.sources.Parquet.read(spark, s"$dir/$name.parquet", nanosAsLong = true)
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       df.schema.find(_.name == "ts").map(_.dataType) match {

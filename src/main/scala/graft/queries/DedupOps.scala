@@ -1032,7 +1032,7 @@ object DedupOps {
     * results unchanged) and thereafter thins candidates ~quadratically
     * (the q89 floor discipline applied to the pair-generating side).
     */
-  private[graft] val CalibSigTarget = 5000L
+  private[graft] final val CalibSigTarget = 5000L
   private[graft] def calibSigMod(n: Long): Long =
     math.max(1L, (n + CalibSigTarget - 1) / CalibSigTarget)
 

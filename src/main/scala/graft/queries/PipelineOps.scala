@@ -183,17 +183,23 @@ object PipelineOps {
           .as("trains"))
       .filter(size(col("tests")) + size(col("trains")) <= DfCap)
       .filter(size(col("tests")) > 0)
-    val sizes = postings
-      .select(explode(col("tests")).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_test"))
+    // one chain, no join: each test doc of a list emits a null-train
+    // marker beside its pairs, so the (test, train) count carries each test
+    // doc's gram total n_test too, and a test-keyed window hands it to the
+    // pairs. Joining a pair branch to a size branch instead makes the job
+    // count depend on which branch's stage finishes first (AQE switches the
+    // join to broadcast, or drops an empty side, at different points).
     postings
-      .filter(size(col("trains")) > 0)
       .select(explode(expr(
-        "flatten(transform(tests, a -> transform(trains, b -> named_struct('test_id', a, 'train_id', b))))"))
+        "flatten(transform(tests, a -> concat(" +
+          "array(named_struct('test_id', a, 'train_id', CAST(NULL AS BIGINT))), " +
+          "transform(trains, b -> named_struct('test_id', a, 'train_id', b)))))"))
         .as("p"))
       .groupBy(col("p.test_id").as("test_id"), col("p.train_id").as("train_id"))
       .agg(count(lit(1)).as("shared"))
-      .join(sizes.withColumnRenamed("doc_id", "test_id"), "test_id")
+      .withColumn("n_test", max(when(col("train_id").isNull, col("shared")))
+        .over(Window.partitionBy("test_id")))
+      .filter(col("train_id").isNotNull)
       .withColumn("overlap", col("shared") / col("n_test"))
       .select("test_id", "train_id", "shared", "n_test", "overlap")
   }

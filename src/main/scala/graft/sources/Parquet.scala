@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graft.SmallSortStrategy
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -47,16 +48,37 @@ import org.apache.spark.sql.types.StructType
   */
 object Parquet {
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
+  /** `nanosAsLong` types TIMESTAMP(NANOS) columns as longs, as
+    * `spark.sql.legacy.parquet.nanosAsLong` does, for this read's schema
+    * only: the session conf is left as it was. The first read on a session
+    * installs [[SmallSortStrategy]] on it.
+    */
+  def read(spark: SparkSession, path: String, nanosAsLong: Boolean = false): DataFrame = {
+    SmallSortStrategy.install(spark)
+    footerSchema(spark, path, nanosAsLong) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None => spark.read.parquet(path)
+      case None => withNanosAsLong(spark, nanosAsLong)(spark.read.parquet(path))
     }
+  }
+
+  /** Runs Spark's own inference with the session's nanosAsLong on, and
+    * puts the conf back as it was.
+    */
+  private def withNanosAsLong[T](spark: SparkSession, on: Boolean)(body: => T): T = {
+    val key = SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key
+    if (!on || spark.sessionState.conf.legacyParquetNanosAsLong) body
+    else {
+      val prior = spark.conf.getAll.get(key)
+      spark.conf.set(key, "true")
+      try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
 
   /** The data schema `spark.read.parquet(path)` would infer, read from one
     * footer on the driver — or None where [[read]] hands the read to Spark.
     */
-  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  private[graft] def footerSchema(spark: SparkSession, path: String,
+      nanosAsLong: Boolean = false): Option[StructType] = {
     val sqlConf = spark.sessionState.conf
     if (path.exists("{}[]*?\\".contains(_)) || sqlConf.isParquetSchemaMergingEnabled) None
     else {
@@ -69,7 +91,7 @@ object Parquet {
           else Option.when(!hidden(st.getPath.getName))(Nil -> st)
         }
         .flatMap { case (partitionKeys, footer) =>
-          Try(schemaOf(footer, conf, sqlConf)).toOption
+          Try(schemaOf(footer, conf, sqlConf, nanosAsLong)).toOption
             .filterNot(s => partitionKeys.exists(k => s.fieldNames.exists(sqlConf.resolver(_, k))))
         }
     }
@@ -114,7 +136,8 @@ object Parquet {
         else Some(keys -> e)
       }.nextOption()
 
-  private def schemaOf(file: FileStatus, conf: Configuration, c: SQLConf): StructType = {
+  private def schemaOf(file: FileStatus, conf: Configuration, c: SQLConf,
+      nanosAsLong: Boolean): StructType = {
     val options = HadoopReadOptions.builder(conf, file.getPath)
       .withMetadataFilter(SKIP_ROW_GROUPS).build()
     val footer = scala.util.Using.resource(
@@ -127,7 +150,7 @@ object Parquet {
       assumeBinaryIsString = c.isParquetBinaryAsString,
       assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
       inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
-      nanosAsLong = c.legacyParquetNanosAsLong,
+      nanosAsLong = nanosAsLong || c.legacyParquetNanosAsLong,
       respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
   }

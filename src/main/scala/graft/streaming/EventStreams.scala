@@ -37,7 +37,6 @@ object EventStreams {
     */
   def readEvents(spark: SparkSession, path: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // A streaming reader needs a declared schema, but the events generator
     // has shipped two physical ts encodings over time: TIMESTAMP(NANOS)
     // (surfaces as long via nanosAsLong) and TIMESTAMP(MICROS) ntz. Probe
@@ -47,7 +46,8 @@ object EventStreams {
     // The probe throws on a directory with no files yet (a streaming
     // source may legitimately start EMPTY and fill later): fall back to
     // the raw LongType declaration the pre-probe reader used.
-    val physicalTs = scala.util.Try(graft.sources.Parquet.read(spark, path).schema)
+    val physicalTs = scala.util.Try(
+        graft.sources.Parquet.read(spark, path, nanosAsLong = true).schema)
       .toOption.flatMap(_.find(_.name == "ts").map(_.dataType))
       .getOrElse(LongType)
     val schema = StructType(rawSchema.map(f =>

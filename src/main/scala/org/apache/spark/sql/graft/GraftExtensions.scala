@@ -9,7 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * expressions as SQL functions, so `spark.sql("SELECT float_dot(a, b)")`
   * and `--conf spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
   * work on an unmodified Spark distribution (the customization-ladder rung
-  * SURVEY §2.11 maps the reference's input-adapter registry onto).
+  * SURVEY §2.11 maps the reference's input-adapter registry onto), and
+  * injects the planner strategies [[AsOfJoinStrategy]] and
+  * [[SmallSortStrategy]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -19,6 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new FunctionIdentifier(name), new ExpressionInfo(cls, name), builder))
     }
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => SmallSortStrategy)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.graft.{GraftExtensions, GraftFunctions}
+import org.apache.spark.sql.graft.{AsOfJoinStrategy, GraftExtensions, GraftFunctions, SmallSortStrategy}
 
 /** Native expressions exposed as SQL functions: runtime registration on a
   * live session, plus the SparkSessionExtensions hook for
@@ -29,6 +29,15 @@ class ExtensionsSpec extends SparkSpec {
   test("GraftExtensions injects all functions at construction time") {
     // structural: the injector runs without error on a fresh extensions bag
     new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+  }
+
+  test("GraftExtensions injects the as-of join and small-sort planner strategies") {
+    val injected = Seq.newBuilder[org.apache.spark.sql.execution.SparkStrategy]
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectPlannerStrategy(builder: org.apache.spark.sql.SparkSession =>
+          org.apache.spark.sql.execution.SparkStrategy): Unit = injected += builder(spark)
+    })
+    assert(injected.result() == Seq(AsOfJoinStrategy, SmallSortStrategy))
   }
 
   test("collect_long_list_capped: exact within cap, truncates past it, skips nulls") {

@@ -17,12 +17,6 @@ import graft.sources.Parquet
   */
 class ParquetSpec extends SparkSpec {
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   private def outcome(read: => DataFrame): Either[(String, String), StructType] =
     try Right(read.schema)
     catch { case e: Exception with SparkThrowable => Left(e.getClass.getName -> e.getCondition) }
@@ -116,6 +110,51 @@ class ParquetSpec extends SparkSpec {
       assert(Parquet.footerSchema(spark, dir).isEmpty)
       val merged = Parquet.read(spark, dir).schema
       assert(merged == spark.read.parquet(dir).schema && merged.fieldNames.toSeq == Seq("id", "extra"))
+    }
+  }
+
+  test("events reads type TIMESTAMP(NANOS) as longs and leave the session conf as it was") {
+    // an events file as the generator once wrote it: ts in TIMESTAMP(NANOS)
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmp("nanos")
+    val file = dir.resolve("events.parquet").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  optional int64 event_id;
+        |  optional int64 ts (TIMESTAMP(NANOS,false));
+        |  optional int64 user_id;
+        |  optional binary event_type (STRING);
+        |  optional double value;
+        |  optional binary props (STRING);
+        |}""".stripMargin)
+    val micros = Seq(1700000000000001L, 1700000060000002L)
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
+      .withConf(spark.sessionState.newHadoopConf()).withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try micros.zipWithIndex.foreach { case (us, i) =>
+      writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", us * 1000)
+        .append("user_id", 1L).append("event_type", "view").append("value", 1.0)
+        .append("props", "{}"))
+    } finally writer.close()
+
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getAll
+    assert(Parquet.read(spark, file, nanosAsLong = true).schema("ts").dataType ==
+      org.apache.spark.sql.types.LongType)
+    val batch = Tables(spark, dir.toString, "events")
+    val stream = graft.streaming.EventStreams.readEvents(spark, dir.toString)
+    assert(spark.conf.getAll == before, s"$key: ${spark.conf.getAll.get(key)}")
+    assert(batch.schema("ts").dataType == stream.schema("ts").dataType &&
+      batch.select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq == micros)
+    // Spark's own inference (mergeSchema on) runs with the conf on, then
+    // puts it back
+    withConf("spark.sql.parquet.mergeSchema", "true") {
+      val during = spark.conf.getAll
+      assert(Parquet.read(spark, file, nanosAsLong = true).schema("ts").dataType ==
+        org.apache.spark.sql.types.LongType)
+      assert(spark.conf.getAll == during)
     }
   }
 }

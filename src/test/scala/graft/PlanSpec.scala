@@ -13,6 +13,16 @@ class PlanSpec extends SparkSpec {
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The adaptive plan AQE settled on, read after the query ran (the
+    * text before the initial plan it also prints).
+    */
+  private def finalPlanOf(df: DataFrame): String = {
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p.take(800))
+    p.take(p.indexOf("== Initial Plan =="))
+  }
+
   test("q2: predicates and projection push down to the parquet scan") {
     val p = planOf(queries.Relational.q2FilterProject.fn(spark, sf))
     assert(p.contains("PushedFilters: ["), p.take(800))
@@ -28,6 +38,58 @@ class PlanSpec extends SparkSpec {
     val p = planOf(queries.Relational.q3JoinRevenue.fn(spark, sf))
     assert(p.contains("BroadcastHashJoin"), p.take(800))
     assert(p.contains("BroadcastExchange"))
+  }
+
+  test("q3: the final ORDER BY sorts in one partition, no range exchange; 6 jobs") {
+    val p = finalPlanOf(queries.Relational.q3JoinRevenue.fn(spark, sf))
+    assert(!p.contains("rangepartitioning"), p)
+    assert(ledgerJobs("q3_join_revenue") == 6)
+  }
+
+  test("a sort over materialized input larger than one advisory partition keeps its range exchange") {
+    import org.apache.spark.sql.functions.col
+    val cached = spark.range(0, 20000, 1, 4).select((col("id") * 7919 % 20000).as("k")).persist()
+    try {
+      cached.count()
+      def plan(): String = {
+        val df = cached.orderBy("k")
+        assert(df.collect().map(_.getLong(0)).toSeq == (0L until 20000L))
+        finalPlanOf(df)
+      }
+      assert(!plan().contains("rangepartitioning"), "the built cache fits 64 MB")
+      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k") {
+        assert(plan().contains("Exchange rangepartitioning"))
+      }
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("a sort above an explode keeps its range exchange") {
+    import org.apache.spark.sql.functions.{col, explode, split}
+    val docs = Tables(spark, sf, "documents")
+    val words = docs.select(explode(split(col("text"), " ")).as("w")).orderBy("w")
+    assert(finalPlanOf(words).contains("Exchange rangepartitioning"))
+    // the same scan sorted without the explode fits one partition
+    assert(!finalPlanOf(docs.select(col("text")).orderBy("text")).contains("rangepartitioning"))
+  }
+
+  test("q105: the sort over its TakeOrdered head adds no exchange; 1 job") {
+    assert(ledgerJobs("q105_boilerplate_spans") == 1)
+  }
+
+  test("every registered query returns the same rows, in order, without the small sort") {
+    import org.apache.spark.sql.graft.SmallSortStrategy
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    SmallSortStrategy.install(spark) // so no read below installs it again
+    val strategies = session.experimental.extraStrategies
+    assert(strategies.contains(SmallSortStrategy))
+    def rows(name: String) =
+      try SparkEntry.queries(name)(spark, sf).collect().toSeq finally Caches.clearAll(spark)
+    val differ = SparkEntry.defs.map(_.name).filter { name =>
+      val small = rows(name)
+      session.experimental.extraStrategies = strategies.filterNot(_ == SmallSortStrategy)
+      try rows(name) != small finally session.experimental.extraStrategies = strategies
+    }
+    assert(differ.isEmpty, s"rows differ without the small sort: $differ")
   }
 
   test("q6: global top-k plans as TakeOrderedAndProject, not a full sort") {

@@ -9,11 +9,30 @@ import org.apache.spark.sql.functions._
 class QuerySpec extends SparkSpec {
 
   test("every registered query has a unique name and runs") {
+    // The ledger (plans/jobs_sf0.001.json) holds each query's Spark jobs
+    // for a noop write after a warm one, under a job group. Any difference
+    // fails, in either direction: a change that lowers a count updates the
+    // ledger with it. Each run writes its counts to target/, so the ledger
+    // is refreshed by copying that file over it.
     val names = SparkEntry.defs.map(_.name)
     assert(names.distinct.size == names.size)
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n >= 0, s"$name failed")
+    val ran = names.map(name => name -> ledgerJobs(name))
+    JobLedger.write(java.nio.file.Paths.get("target/jobs_sf0.001.json"), ran)
+    val ledger = JobLedger.read(JobLedger.path).toMap
+    val diff = ran.collect {
+      case (name, n) if !ledger.get(name).contains(n) =>
+        s"$name: ledger ${ledger.get(name).fold("-")(_.toString)}, ran $n"
+    } ++ ledger.keys.filterNot(names.contains).map(n => s"$n: in the ledger, not registered")
+    assert(diff.isEmpty, diff.mkString(
+      s"job counts differ from ${JobLedger.path} (total ${ran.map(_._2).sum}, " +
+        s"ledger ${ledger.values.sum}):\n", "\n", ""))
+  }
+
+  test("q100 and q107 oracles sample against the 5,000-doc target") {
+    // the SQL is interpolated while DedupOps initializes; q100's text comes
+    // before CalibSigTarget's definition, so the target must be a constant
+    Seq("q100_minhash_calibration", "q107_simhash_calibration").foreach { q =>
+      assert(SparkEntry.oracleFor(q).contains("+ 4999) // 5000"), q)
     }
   }
 
@@ -919,15 +938,29 @@ class QuerySpec extends SparkSpec {
       "q66_perplexity", "q71_image_neardup", "q103_label_centroid_matrix",
       "q107_simhash_calibration", "q119_lm_disagreement")
     val jobs = shared.map { name =>
-      val (_, n, builds) = countingCacheBuilds(s"shared-cache-$name") {
-        try SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
-        finally Caches.clearAll(spark)
-      }
+      val (_, n, builds) = countingCacheBuilds(s"shared-cache-$name")(runQuery(name))
       assert(builds.nonEmpty && builds.values.forall(_ == 1),
         s"$name: jobs per cached RDD $builds")
       name -> n
     }.toMap
     assert(Seq("q21_ngram_jaccard", "q31_minhash_lsh", "q71_image_neardup").map(jobs) ==
       Seq(11, 8, 6), s"job counts moved: $jobs")
+  }
+}
+
+/** The committed per-query job-count ledger: a JSON object of query name
+  * to jobs, one entry per line in registry order.
+  */
+object JobLedger {
+  val path: java.nio.file.Path = java.nio.file.Paths.get("plans/jobs_sf0.001.json")
+
+  def read(p: java.nio.file.Path): Seq[(String, Int)] =
+    "\"([^\"]+)\":\\s*(\\d+)".r.findAllMatchIn(java.nio.file.Files.readString(p))
+      .map(m => m.group(1) -> m.group(2).toInt).toSeq
+
+  def write(p: java.nio.file.Path, counts: Seq[(String, Int)]): Unit = {
+    java.nio.file.Files.createDirectories(p.getParent)
+    java.nio.file.Files.writeString(p,
+      counts.map { case (n, j) => s"  \"$n\": $j" }.mkString("{\n", ",\n", "\n}\n"))
   }
 }

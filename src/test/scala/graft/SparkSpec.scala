@@ -12,17 +12,41 @@ trait SparkSpec extends AnyFunSuite {
 
   /** Runs `body` under job group `group` (unique per call: the status
     * tracker keeps earlier groups' jobs) and returns its result with the
-    * number of Spark jobs it launched. The tracker fills asynchronously,
-    * so the count is polled until stable.
+    * number of Spark jobs it launched. The tracker is fed by the listener
+    * bus, so the count is read once the bus has drained.
     */
   def countingJobs[T](group: String)(body: => T): (T, Int) = {
     val sc = spark.sparkContext
     sc.setJobGroup(group, group, interruptOnCancel = false)
     val out = try body finally sc.clearJobGroup()
-    def count: Int = sc.statusTracker.getJobIdsForGroup(group).length
-    var last = -1; var jobs = count
-    while (jobs != last) { Thread.sleep(200); last = jobs; jobs = count }
-    (out, jobs)
+    org.apache.spark.ListenerBusDrain(sc)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  /** Runs `body` with session conf `key` set to `value`, then puts the conf
+    * back as it was (unset if it was unset).
+    */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Materializes registry query `name` with a noop write, then drops the
+    * caches it made.
+    */
+  def runQuery(name: String): Unit =
+    try SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
+    finally Caches.clearAll(spark)
+
+  private val ledgerRuns = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** The jobs of [[runQuery]] after a warm run (layouts built, sources
+    * listed): the count the job ledger (plans/jobs_sf0.001.json) records.
+    */
+  def ledgerJobs(name: String): Int = {
+    runQuery(name)
+    countingJobs(s"ledger-$name-${ledgerRuns.incrementAndGet()}")(runQuery(name))._2
   }
 
   /** [[countingJobs]] plus, for each persisted RDD, the number of the
