@@ -48,9 +48,47 @@ object Bench {
     line
   }
 
+  /** Builds every ingest-time derived layout of `sfDir` and returns each
+    * failed build's error by layout name (also printed to stderr).
+    *
+    * The stamped stores (shingle postings, pair graph, split assignment,
+    * codebooks, bucketed embeddings, BPE merges) are corpus INGEST
+    * artifacts — production builds each once when data lands and every
+    * query reads it, which is exactly how the queries consume them here.
+    * Without the prebuild, whichever query alphabetically first touches a
+    * layout pays its one-time build inside measured run 1, charging ingest
+    * cost to query cost.
+    */
+  private[graft] def prebuildLayouts(spark: SparkSession, sfDir: String): Seq[(String, String)] = {
+    import graft.sources._
+    Seq[(String, () => Any)](
+      "CorpusStatsEmbeddings" -> (() => CorpusStats.rowCount(spark, sfDir)),
+      "CorpusStatsDocuments" -> (() => CorpusStats.rowCount(spark, sfDir, "documents")),
+      "DocFingerprints" -> (() => DocFingerprints(spark, sfDir)),
+      "TermStats" -> (() => TermStats(spark, sfDir)),
+      "SpanStats" -> (() => SpanStats(spark, sfDir)),
+      "ChunkStats" -> (() => ChunkStats(spark, sfDir)),
+      "ShinglePostings" -> (() => ShinglePostings(spark, sfDir)),
+      "PairGraph" -> (() => PairGraph(spark, sfDir)),
+      "ClusterAssignment" -> (() => ClusterAssignment(spark, sfDir)),
+      "SplitAssignment" -> (() => SplitAssignment(spark, sfDir)),
+      "IvfCentroids" -> (() => IvfCentroids(spark, sfDir)),
+      "PqCodebooks" -> (() => PqCodebooks(spark, sfDir)),
+      "BucketedEmbeddings" -> (() => BucketedEmbeddings(spark, sfDir)),
+      "BpeMerges" -> (() => BpeMerges(spark, sfDir)),
+      "BigramLm" -> (() => BigramLm.model(spark, sfDir))
+    ).flatMap { case (name, build) =>
+      try { build(); None }
+      catch { case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        System.err.println(s"[bench] layout $name FAILED: $msg")
+        Some(name -> msg)
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // median-of-3, deliberately NOT more: this box throttles under
     // sustained all-core load (measured: the same suite totals 19-24s at
     // 3 runs/query but 33-41s at 5 — the extra samples BURN the budget
@@ -64,33 +102,7 @@ object Bench {
     // worst-plausible widths (full-precision doubles, 4-digit query count).
     compactSummary(99999.999999999999, 99999.999999999999,
       nQueries = 9999, nErrors = 9999, runs = runs, sfDir = sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Local parquet at bench scale is a handful of ~20 MB files; the
-      // default 128 MB split puts a whole table in one partition and
-      // serializes the scan on one core. 4 MB splits fan the scan out to
-      // all local threads. (Cluster deployments keep the 128 MB default —
-      // this is a bench-harness knob, not an engine semantic.)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Static conf, takes effect because this is the first session in the
-      // JVM: the suite generates ~400+ distinct codegen units, and the
-      // default 100-entry Janino cache thrashes across queries — every
-      // revisit re-pays ~100-300 ms of source-level compilation.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // Measured, kept at defaults: shuffle lz4 OFF is ~1.6x slower on the
-      // shuffle-heavy subset (7.1s vs 4.5s) — the I/O volume reduction
-      // beats the codec CPU even on local disk.
-      // NOTE: spark.local.dir on /dev/shm was tried and is 3-20x SLOWER
-      // here (q21 0.9s -> 17s): tmpfs pages fight the 24g heap for the
-      // same VM memory and shuffle-file mmap behaves pathologically.
-      // Disk-backed /tmp with OS writeback is the fast path on this box.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     // Steady-state warmup: run every query once at the smallest SF. The
     // generated whole-stage code is identical across scale factors (plans
@@ -109,33 +121,10 @@ object Bench {
       catch { case _: Throwable => () }
       finally Caches.clearAll(spark)
     }
-    // Ingest-time derived layouts, built BEFORE the measured passes: the
-    // stamped stores (shingle postings, pair graph, split assignment,
-    // codebooks, bucketed embeddings, BPE merges) are corpus INGEST
-    // artifacts — production builds each once when data lands and every
-    // query reads it, which is exactly how the queries consume them here.
-    // Without this, whichever query alphabetically first touches a layout
-    // pays its one-time build inside measured run 1, charging ingest cost
-    // to query cost (min-of-3 already excluded it; this makes the mean
-    // honest too). Build failures fall through to the measured path —
-    // the query that needs the layout will surface the error attributed.
-    Seq[() => Any](
-      () => graft.sources.CorpusStats.rowCount(spark, sfDir),
-      () => graft.sources.CorpusStats.rowCount(spark, sfDir, "documents"),
-      () => graft.sources.DocFingerprints(spark, sfDir),
-      () => graft.sources.TermStats(spark, sfDir),
-      () => graft.sources.SpanStats(spark, sfDir),
-      () => graft.sources.ChunkStats(spark, sfDir),
-      () => graft.sources.ShinglePostings(spark, sfDir),
-      () => graft.sources.PairGraph(spark, sfDir),
-      () => graft.sources.ClusterAssignment(spark, sfDir),
-      () => graft.sources.SplitAssignment(spark, sfDir),
-      () => graft.sources.IvfCentroids(spark, sfDir),
-      () => graft.sources.PqCodebooks(spark, sfDir),
-      () => graft.sources.BucketedEmbeddings(spark, sfDir),
-      () => graft.sources.BpeMerges(spark, sfDir),
-      () => graft.sources.BigramLm.model(spark, sfDir)
-    ).foreach(b => try b() catch { case _: Throwable => () })
+    // Ingest-time derived layouts, built BEFORE the measured passes (see
+    // prebuildLayouts). A failed build is reported, not retried here: the
+    // query that needs the layout surfaces the error attributed.
+    val layoutErrors = prebuildLayouts(spark, sfDir)
     Caches.clearAll(spark)
     // Measure in PASSES over the whole suite (run 1 of every query, then
     // run 2, then run 3) rather than 3 back-to-back runs per query: this
@@ -143,32 +132,24 @@ object Bench {
     // thermal state a function of ALPHABETICAL POSITION (q5x always
     // measured hottest). Passes give every query one sample from each
     // thermal epoch; the median then compares like with like.
-    // Per-query jobs_launched (overhead honesty): sub-second queries that
-    // read >2x the oracle are usually paying fixed per-job scheduling, not
-    // plan cost — the job count makes the two separable in the record.
-    // Jobs are attributed by SUBMISSION time (SparkListenerJobStart.time,
-    // stamped synchronously on the driver at submit) falling inside the
-    // query's wall interval, so async listener-bus delivery can't
-    // misattribute, and jobs from query-internal worker threads (q53's
-    // concurrent arms) are still counted.
-    val jobTimes = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobTimes.add(j.time)
-      })
-    val intervals = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
+    // Per-query jobs (overhead honesty): sub-second queries that read >2x
+    // the oracle are usually paying fixed per-job scheduling, not plan
+    // cost — the job count makes the two separable in the record. Each
+    // run's jobs are counted under a job group of its own, which threads
+    // the query starts (q53's concurrent arms) inherit.
+    val jobCounts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
-    (1 to runs).foreach { _ =>
+    (1 to runs).foreach { pass =>
       selected.foreach { case (name, fn) =>
         if (!errors.contains(name)) {
-          val w0 = System.currentTimeMillis()
-          val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            samples(name) = ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(name, Nil)
-            intervals(name) = (w0, System.currentTimeMillis()) // last pass wins
+            val (secs, jobs) = Sessions.countingJobs(spark, s"bench-$name-$pass") {
+              val t0 = System.nanoTime()
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              (System.nanoTime() - t0) / 1e9
+            }
+            samples(name) = secs :: samples.getOrElse(name, Nil)
+            jobCounts(name) = jobs // last pass wins
           } catch {
             case e: Throwable =>
               errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -176,14 +157,6 @@ object Bench {
           } finally Caches.clearAll(spark) // each run pays its full cost
         }
       }
-    }
-    Thread.sleep(500) // drain the listener bus before reading job starts
-    val jobStarts = {
-      val it = jobTimes.iterator(); val b = Seq.newBuilder[Long]
-      while (it.hasNext) b += it.next(); b.result()
-    }
-    val jobCounts = intervals.map { case (name, (a, b)) =>
-      name -> jobStarts.count(t => t >= a && t <= b)
     }
     val results = selected.flatMap { case (name, _) =>
       samples.get(name).filter(_.nonEmpty)
@@ -207,7 +180,8 @@ object Bench {
     // regression without re-running the suite (the exact ambiguity that
     // muddied the round-9 q62/q63 record).
     val qsMin = minResults.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    def jmap(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val minTotal = minResults.map(_._2).sum
     // Emission order matters: the driver parses a bounded TAIL of stdout
@@ -220,7 +194,7 @@ object Bench {
     // steady state — first passes may pay one-time DerivedLayout builds)
     val qsJobs = jobCounts.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     val detailLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qsMin,"jobs":$qsJobs,"errors":$errJson,"runs":$runs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$qsMin,"jobs":$qsJobs,"errors":${jmap(errors)},"layout_errors":${jmap(layoutErrors)},"runs":$runs,"sf":"$sfDir"}"""
     // min_total: sum of per-query MINIMA across passes — robust to this box's
     // thermal throttling (a hot pass inflates medians uniformly; the min of
     // one-sample-per-thermal-epoch is the coolest observed execution).
@@ -242,7 +216,7 @@ object Bench {
     val stamped = {
       val p = java.nio.file.Paths.get(outFile)
       val dir = Option(p.getParent).map(_.toString).getOrElse(".")
-      java.nio.file.Paths.get(dir, s"BENCH_detail_c$cpus.json")
+      java.nio.file.Paths.get(dir, s"BENCH_detail_c${Sessions.cpus}.json")
     }
     try java.nio.file.Files.writeString(
       stamped, detailLine + "\n" + summaryLine + "\n")

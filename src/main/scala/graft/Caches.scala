@@ -59,8 +59,8 @@ object Caches {
     * while it CONSTRUCTS its frame (q21's postings, q31, q39, q66, q71,
     * q103, q107, q119, the PairGraph layout, and the near_dedup,
     * image_near_dedup and perplexity_filter stages while a chain is
-    * composed), so a plan-only caller — `explain`, PlanDump,
-    * tools.PlanFiles — pays for those builds too. The build's tasks see
+    * composed), so a plan-only caller — `explain`, PlanDump — pays for
+    * those builds too. The build's tasks see
     * the session's SQL conf, as the tasks of a query's own cache-stage job
     * do.
     */

@@ -1,26 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan dossier generator: `.explain("formatted")` for the headline
   * queries against a scale-factor dir, written to a markdown file — the
   * "explain and iterate until it's the plan you'd want" audit trail
   * (PLANS.md is the checked-in snapshot; regenerate after plan work).
+  * The session is Bench's ([[Sessions.local]]), so a dumped plan is the
+  * plan the bench measures; optional trailing query names dump those
+  * queries instead of the headline set (a before/after pair for a plan
+  * change).
   *
-  * Usage: runMain graft.PlanDump [sfDir] [outFile]
+  * Usage: runMain graft.PlanDump [sfDir] [outFile] [queryName...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val headline = Seq(
+    val spark = Sessions.local()
+    val named = args.drop(2).toSeq
+    val headline = if (named.nonEmpty) named else Seq(
       "q1_pricing_summary", "q2_filter_project", "q3_join_revenue", "q6_topk",
       "q21_ngram_jaccard", "q23_sessionize", "q24_asof_join", "q25_json_extract",
       "q27_dot_topk",

@@ -1,24 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs in Bench's
+  * session ([[Sessions.local]]). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing query names restrict the dump (targeted re-gates)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 58 queries generate ~400+ codegen units; the default 100-entry
-      // Janino cache thrashes across the dump (see Bench.scala).
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.foreach { case (name, fn) =>
@@ -67,7 +57,7 @@ object Verify {
           val node = new com.fasterxml.jackson.databind.ObjectMapper()
             .readTree(Files.readString(Paths.get(s"$outDir/errors.json")))
           import scala.jdk.CollectionConverters._
-          node.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
+          node.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
         } catch { case _: Throwable => Map.empty[String, String] }
       } else Map.empty
     val merged = (prior -- only) ++ failures

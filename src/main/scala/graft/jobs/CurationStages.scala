@@ -707,7 +707,7 @@ object CurationStages {
             "bpe_annotate: mergesFrom=corpus needs a table-dir job source " +
               "to locate the corpus artifact"))
           graft.sources.BpeMerges(s, dir)
-        case "flow" => graft.queries.TextOps.learnBpeMergesFrom(s, docs)
+        case "flow" => graft.queries.TextOps.learnBpeMergesFrom(docs)
         case other => throw new IllegalArgumentException(
           s"bpe_annotate: mergesFrom must be 'flow' or 'corpus', got '$other'")
       }).map { case (_, pa, pb, _, _) => (pa, pb) }

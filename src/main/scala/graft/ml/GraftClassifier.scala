@@ -85,7 +85,7 @@ class GraftClassifier(override val uid: String)
     val g = new graft.Graft(ds.sparkSession, $(dim),
       TrainConfig(lr = $(stepSize), iters = $(maxIter), l2 = $(regParam)),
       numClasses = $(numClasses))
-    val w = g.train(ds.toDF, $(featuresCol), $(labelCol))
+    val w = g.train(ds.toDF(), $(featuresCol), $(labelCol))
     copyValues(new GraftClassifierModel(uid, w).setParent(this))
   }
 
@@ -125,7 +125,7 @@ class GraftClassifierModel private[ml] (
       // input-columns-ride-along output schema (r20 review finding)
       val zc = s"__${uid}_z"
       val pc = s"__${uid}_p"
-      ds.toDF.withColumn(zc, z)
+      ds.toDF().withColumn(zc, z)
         .withColumn(pc, lit(1.0) / (lit(1.0) + exp(-col(zc))))
         .withColumn("ip1", array(col(zc).cast(FloatType)))
         .withColumn("prob", array(col(pc).cast(FloatType),
@@ -142,7 +142,7 @@ class GraftClassifierModel private[ml] (
       val mx = greatest(zs: _*)
       val es = zs.map(z => exp(z - mx))
       val denom = es.reduce(_ + _)
-      ds.toDF
+      ds.toDF()
         .withColumn("ip1", array(zs.map(_.cast(FloatType)): _*))
         .withColumn("prob", array(es.map(e => (e / denom).cast(FloatType)): _*))
     }

@@ -45,7 +45,7 @@ object Partitioning {
         .sortWithinPartitions(orderCols.map(col): _*)
     val n = df.count()
     val numParts = math.max(1, ((n + rowsPerPartition - 1) / rowsPerPartition).toInt)
-    val keyed = sorted.rdd.zipWithIndex.map { case (r, i) => (i, r) }
+    val keyed = sorted.rdd.zipWithIndex().map { case (r, i) => (i, r) }
     val placed = keyed.repartitionAndSortWithinPartitions(
       new org.apache.spark.Partitioner {
         override def numPartitions: Int = numParts

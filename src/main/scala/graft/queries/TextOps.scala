@@ -1244,8 +1244,6 @@ object TextOps {
     */
   private[graft] def bigramPerplexityScoredFrame(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val V = PplVocab
-    val C = V + 1
     // one persisted tokenized frame feeds the vocab action, the pair
     // pass, and the scoring pass (q66's reuse discipline — released by
     // the runner's Caches.clearAll, or a -curate job's clearCreatedSince);
@@ -1378,7 +1376,7 @@ object TextOps {
     */
   private[graft] def learnBpeMerges(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Long, String, String, String, Long)] =
-    learnBpeMergesFrom(s, Tables(s, dir, "documents"))
+    learnBpeMergesFrom(Tables(s, dir, "documents"))
 
   /** word → post-merge symbol count for a given merge table: the
     * vocabulary-sized map-only derivation q84 and the declarative
@@ -1402,8 +1400,8 @@ object TextOps {
   /** Frame-generic trainer entry: the declarative `bpe_annotate` stage
     * learns from whatever (curated) corpus it is handed, not a table dir.
     */
-  private[graft] def learnBpeMergesFrom(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame): Seq[(Long, String, String, String, Long)] = {
+  private[graft] def learnBpeMergesFrom(docs: org.apache.spark.sql.DataFrame,
+      driverVocabMax: Int = BpeDriverVocabMax): Seq[(Long, String, String, String, Long)] = {
       val K = BpeRounds
       val wf = docs
         .select(explode(toks).as("word"))
@@ -1413,12 +1411,12 @@ object TextOps {
       // ONE distributed pass — corpus → word-frequency table — and run the
       // merge rounds in memory over that table: rounds are vocabulary-
       // space, and even a 10⁶-word count table is a few dozen MB. The
-      // collect is bounded by BpeDriverVocabMax (limit pushed into the
+      // collect is bounded by driverVocabMax (limit pushed into the
       // collect, so an over-threshold vocab ships threshold+1 rows, not
       // the table); above it the distributed round loop below runs
       // instead — same math, argmax-per-round jobs.
-      val wfRows = wf.limit(BpeDriverVocabMax + 1).collect()
-      if (wfRows.length <= BpeDriverVocabMax) {
+      val wfRows = wf.limit(driverVocabMax + 1).collect()
+      if (wfRows.length <= driverVocabMax) {
         // exact counts: the limit sits above the completed aggregation
         var words: Array[(Array[String], Long)] =
           wfRows.map(r => (r.getString(0).map(_.toString).toArray, r.getLong(1)))
@@ -1448,7 +1446,7 @@ object TextOps {
             (out.toArray, n)
           }
         }
-      } else distributedBpeRounds(s, wf, merges)
+      } else distributedBpeRounds(wf, merges)
       merges.toSeq
   }
 
@@ -1517,101 +1515,85 @@ object TextOps {
     * rounds. Symbols are strictly [a-z0-9], safe to embed in expression
     * text. Appends the K merge rows to `merges`.
     */
-  private def distributedBpeRounds(s: org.apache.spark.sql.SparkSession,
-      wf: org.apache.spark.sql.DataFrame,
+  private def distributedBpeRounds(wf: org.apache.spark.sql.DataFrame,
       merges: scala.collection.mutable.ArrayBuffer[(Long, String, String, String, Long)])
       : Unit = {
     val K = BpeRounds
-    var w = wf.withColumn("s",
+    // Round-loop engine settings, on a clone of the caller's session (the
+    // caller's own conf is never written, so a query running concurrently
+    // on it — q53's re-rank thread, a JobRunner mode — keeps its settings):
+    // - AQE off: each round is a vocab-space micro-query (31-row input
+    //   at bench SF) where AQE's per-stage materialization futures add a
+    //   job boundary per shuffle — measured as a third of q82's wall
+    //   with zero replanning benefit (no skew, nothing to coalesce).
+    // - shuffle partitions sized to the VOCAB aggregate, not the corpus:
+    //   every shuffle in scope reduces to ≤|vocab| rows after map-side
+    //   partials (wf's reduce side included), so corpus-width reduce
+    //   fan-out only buys empty-task overhead. A production trainer
+    //   sizes its round-loop shuffles to the vocab table the same way.
+    val words = org.apache.spark.sql.graft.ClonedSession.withSettings(wf,
+      "spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "1")
+    var w = words.withColumn("s",
         concat(lit("."), array_join(expr("regexp_extract_all(word, '.', 0)"), ".."),
           lit(".")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // queue of superseded checkpoints: w_{r-1}'s blocks are read when
-      // the LAZY checkpoint of w_r materializes inside round r+1's argmax
-      // job, so w_{r-1} is safe to release only after that job — two
-      // rounds behind the head
-      val oldW = scala.collection.mutable.Queue.empty[org.apache.spark.sql.DataFrame]
-      // Round-loop engine settings, restored in the finally:
-      // - AQE off: each round is a vocab-space micro-query (31-row input
-      //   at bench SF) where AQE's per-stage materialization futures add a
-      //   job boundary per shuffle — measured as a third of q82's wall
-      //   with zero replanning benefit (no skew, nothing to coalesce).
-      // - shuffle partitions sized to the VOCAB aggregate, not the corpus:
-      //   every shuffle in scope reduces to ≤|vocab| rows after map-side
-      //   partials (wf's reduce side included), so corpus-width reduce
-      //   fan-out only buys empty-task overhead. A production trainer
-      //   sizes its round-loop shuffles to the vocab table the same way.
-      val aqeWas = s.conf.get("spark.sql.adaptive.enabled", "true")
-      val shufWas = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions", "1")
-      try for (r <- 0 until K) {
-        val pairs = w
-          .withColumn("sy", split(trim(col("s"), "."), "\\.\\."))
-          .select(col("n"), explode(expr(
-            "zip_with(slice(sy, 1, size(sy)-1), slice(sy, 2, size(sy)-1), " +
-              "(a, b) -> named_struct('pa', a, 'pb', b))")).as("p"))
-          .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
-          .agg(sum(col("n")).as("cnt"))
-        val m = pairs.orderBy(col("cnt").desc, col("pa"), col("pb")).limit(1)
-          .collect().head
-        val (pa, pb, cnt) = (m.getString(0), m.getString(1), m.getLong(2))
-        merges += ((r.toLong, pa, pb, pa + pb, cnt))
-        // the merge patterns ride as lit() references, NOT interpolated
-        // SQL text: every round's plan then has the same SHAPE and the
-        // same generated Java (literals live in the references array), so
-        // whole-stage codegen compiles once for all K rounds instead of
-        // per round — the per-round Janino compile was most of the gap
-        // between stage time and wall time
-        w = w.withColumn("s", replace(col("s"),
-          lit(s".$pa..$pb."), lit(s".$pa$pb.")))
-        // cadence knob: re-materialize the symbol table every
-        // BpePersistEvery rounds, keeping plan depth (and recompute on a
-        // lost partition) bounded by the cadence, the way a production
-        // trainer's checkpoint does at 10⁴+ rounds. Cadence 1 also keeps
-        // every round's plan identical — the codegen-reuse prerequisite.
-        // Superseded tables unpersist one round later (their successor's
-        // materialization read them).
-        if (BpePersistEvery > 0 && (r + 1) % BpePersistEvery == 0 && r + 1 < K) {
-          // LAZY localCheckpoint (not persist): persist leaves the full
-          // lineage in the logical plan, so analysis/optimization and
-          // CacheManager sameResult lookups grow with the round index —
-          // measured as the dominant per-round cost once the corpus pass
-          // was cached. Checkpointing truncates the plan to a LogicalRDD:
-          // every round analyzes/plans the SAME constant-depth tree
-          // (q62's pointer-jumping discipline). Lazy, so the NEXT round's
-          // argmax job materializes it — no dedicated checkpoint job per
-          // round; superseded tables release two rounds behind.
-          val next = w.localCheckpoint(eager = false)
-          oldW.enqueue(next)
-          if (oldW.size > 2) oldW.dequeue().unpersist(blocking = false)
-          w = next
-        }
-      } finally {
-        s.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        s.conf.set("spark.sql.shuffle.partitions", shufWas)
+    // queue of superseded checkpoints: w_{r-1}'s blocks are read when
+    // the LAZY checkpoint of w_r materializes inside round r+1's argmax
+    // job, so w_{r-1} is safe to release only after that job — two
+    // rounds behind the head
+    val oldW = scala.collection.mutable.Queue.empty[org.apache.spark.sql.DataFrame]
+    for (r <- 0 until K) {
+      val pairs = w
+        .withColumn("sy", split(trim(col("s"), "."), "\\.\\."))
+        .select(col("n"), explode(expr(
+          "zip_with(slice(sy, 1, size(sy)-1), slice(sy, 2, size(sy)-1), " +
+            "(a, b) -> named_struct('pa', a, 'pb', b))")).as("p"))
+        .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
+        .agg(sum(col("n")).as("cnt"))
+      val m = pairs.orderBy(col("cnt").desc, col("pa"), col("pb")).limit(1)
+        .collect().head
+      val (pa, pb, cnt) = (m.getString(0), m.getString(1), m.getLong(2))
+      merges += ((r.toLong, pa, pb, pa + pb, cnt))
+      // the merge patterns ride as lit() references, NOT interpolated
+      // SQL text: every round's plan then has the same SHAPE and the
+      // same generated Java (literals live in the references array), so
+      // whole-stage codegen compiles once for all K rounds instead of
+      // per round — the per-round Janino compile was most of the gap
+      // between stage time and wall time
+      w = w.withColumn("s", replace(col("s"),
+        lit(s".$pa..$pb."), lit(s".$pa$pb.")))
+      // re-materialize the symbol table every round, keeping plan depth
+      // (and recompute on a lost partition) bounded the way a production
+      // trainer's checkpoint does at 10⁴+ rounds, and every round's plan
+      // identical — the codegen-reuse prerequisite. Superseded tables
+      // unpersist one round later (their successor's materialization
+      // read them).
+      if (r + 1 < K) {
+        // LAZY localCheckpoint (not persist): persist leaves the full
+        // lineage in the logical plan, so analysis/optimization and
+        // CacheManager sameResult lookups grow with the round index —
+        // measured as the dominant per-round cost once the corpus pass
+        // was cached. Checkpointing truncates the plan to a LogicalRDD:
+        // every round analyzes/plans the SAME constant-depth tree
+        // (q62's pointer-jumping discipline). Lazy, so the NEXT round's
+        // argmax job materializes it — no dedicated checkpoint job per
+        // round; superseded tables release two rounds behind.
+        val next = w.localCheckpoint(eager = false)
+        oldW.enqueue(next)
+        if (oldW.size > 2) oldW.dequeue().unpersist(blocking = false)
+        w = next
       }
+    }
   }
-
-  /** q82 symbol-table checkpoint cadence for the distributed fallback:
-    * re-checkpoint the merged word table every N rounds (0 = never).
-    * Bounds lineage depth at production round counts the way a trainer's
-    * checkpoint does, and at cadence 1 makes every round's plan shape
-    * identical so whole-stage codegen compiles once for all K rounds
-    * (measured: the per-round compile dominated the round-12 gap between
-    * stage time and wall time).
-    */
-  private[graft] val BpePersistEvery = 1
 
   /** q82 driver-rounds bound: when the word-frequency table has at most
     * this many rows it collects and the merge rounds run in memory — the
     * production trainer shape (Sennrich's learn_bpe / HF tokenizers train
     * over the counts table in a single process after the corpus
     * reduction); 200k words ≈ a few dozen MB of driver heap. Above the
-    * bound the distributed argmax-per-round loop runs instead. var so the
-    * equivalence spec can force the fallback at test SF.
+    * bound the distributed argmax-per-round loop runs instead.
     */
-  @volatile private[graft] var BpeDriverVocabMax = 200000
+  private[graft] final val BpeDriverVocabMax = 200000
 
   /** Q93 — DSIR importance resampling (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): select pretraining

@@ -450,7 +450,7 @@ object VectorOps {
     // dots — evaluated by the same codegen'd FloatVectorDot the stored
     // buckets were derived with, so driver sign/margin math is bit-exact
     val q = Tables(s, dir, "embeddings").filter(col("vec_id") === 0)
-      .select(col("embedding") +: planeDotCols: _*).head
+      .select(col("embedding") +: planeDotCols: _*).head()
     val qv = q.getSeq[Float](0).toArray
     val probes = probeBuckets((1 to 16).map(q.getDouble))
     layout
@@ -652,7 +652,7 @@ object VectorOps {
       // probe-set job, no broadcast build; the probe predicate lands in
       // the scan as an IN filter.
       val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head.getSeq[Float](0)
+        .select(col("embedding")).head().getSeq[Float](0)
       val probeCells = KMeans.probeCellsLocal(qv, c1, nprobe = 2)
       a1.filter(col("vec_id") =!= 0 && col("cell").isin(probeCells: _*))
         .select(col("vec_id"), col("label"), col("cell"),
@@ -1131,7 +1131,7 @@ object VectorOps {
       val cb: Seq[Seq[(Long, Seq[Double])]] =
         (0 until M).map(sub => c0.map { case (l, c) => (l, c.slice(sub * D, sub * D + D)) })
       val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head.getSeq[Float](0)
+        .select(col("embedding")).head().getSeq[Float](0)
       // ADC lookup table, driver math: same sequential fold as the oracle's
       // list_dot_product over the identical doubles
       val lut: Seq[Seq[Double]] = (0 until M).map { sub =>
@@ -1205,7 +1205,6 @@ object VectorOps {
     */
   val q92AnnPqTrained: QueryDef = {
     val M = 8 // subspaces
-    val D = 8 // dims per subspace
     QueryDef.sql(
       "q92_ann_pq_trained",
       s"""WITH c0 AS (${CentSql("embeddings", "label")}),
@@ -1231,7 +1230,7 @@ object VectorOps {
       val PQ = graft.sources.PqCodebooks
       val cb = PQ(s, dir)
       val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head.getSeq[Float](0)
+        .select(col("embedding")).head().getSeq[Float](0)
       // per-sub LUT, driver math: sequential fold ≡ the oracle's
       // list_dot_product over identical doubles; single query → qid 0
       val adcMaps = PQ.adcMaps(cb, Seq((0L, PQ.queryLut(cb, i => qv(i).toDouble))))
@@ -1311,7 +1310,7 @@ object VectorOps {
         s"pq_code packs labels into 4-bit fields; centroid labels must be in [0,16), " +
           s"got ${c0.map(_._1).mkString(",")}")
       val qv = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).head.getSeq[Float](0)
+        .select(col("embedding")).head().getSeq[Float](0)
       // coarse stage — identical to q42: map-only argmin assignment, probe
       // cells from driver math over the already-collected centroid table
       val probeCells = KMeans.probeCellsLocal(qv, c1, nprobe = 2)

@@ -69,7 +69,7 @@ object BucketedEmbeddings {
             .withColumn("bucket", graft.queries.VectorOps.lshBucket)
             // read-back partition values are INT; match before the union
             .withColumn("bucket", col("bucket").cast("int"))
-          old.unionByName(delta.select(old.columns.map(col): _*))
+          old.unionByName(delta.select(old.columns.toSeq.map(col): _*))
         }
       out.repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(tmp)

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The q68 leakage-safe split relation (doc_id, cluster_id, split)
   * materialized once per source corpus and shared by its consumers: q68

@@ -372,7 +372,7 @@ object DocumentStreams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
-    def update(key: (String, String), rows: Iterator[DocTok],
+    def update(@scala.annotation.unused key: (String, String), rows: Iterator[DocTok],
         state: GroupState[PackState]): Iterator[PackedDoc] = {
       var cum = state.getOption.map(_.cumTok).getOrElse(0L)
       val out = rows.toSeq.sortBy(_.doc_id).map { d =>
@@ -488,7 +488,7 @@ object DocumentStreams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = edges.sparkSession
     import spark.implicits._
-    def step(key: Int, rows: Iterator[EdgeRow],
+    def step(@scala.annotation.unused key: Int, rows: Iterator[EdgeRow],
         state: GroupState[ForestState]): Iterator[ClusterAssignment] = {
       var parent = state.getOption.map(_.parent).getOrElse(Map.empty[Long, Long])
       def find(x: Long): Long = {

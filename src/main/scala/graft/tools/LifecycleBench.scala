@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-16 receipt: the DECLARED lifecycle exercised end-to-end at bench
@@ -11,9 +10,9 @@ import org.apache.spark.sql.functions._
   * the same JobRunner entry a spark-submit would hit. The per-query bench
   * times queries in isolation; this times the config-driven ORCHESTRATION
   * — one wall clock around the whole chain, recorded next to the
-  * sum-of-stages so the overhead of the declared lifecycle (config
-  * parsing, stage composition, cache scoping, layout stamping) is a
-  * measured number instead of an assumption.
+  * sum-of-stages and each mode's Spark jobs so the overhead of the
+  * declared lifecycle (config parsing, stage composition, cache scoping,
+  * layout stamping) is a measured number instead of an assumption.
   *
   * The layout tmp root is re-pointed at a fresh directory BEFORE the
   * session starts, so `-ingest` genuinely BUILDS all seven layouts rather
@@ -31,14 +30,7 @@ object LifecycleBench {
     val work = scratch.resolve("work").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     def writeConf(name: String, body: String): String = {
       val p = java.nio.file.Paths.get(work, name)
@@ -89,11 +81,14 @@ object LifecycleBench {
          |}""".stripMargin)
 
     val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val jobs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     def timed(name: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
-      f
+      jobs(name) = graft.Sessions.countingJobs(spark, s"lifecycle-$name")(f)._2
       times(name) = (System.nanoTime() - t0) / 1e9
     }
+    def perMode(m: Iterable[(String, Any)]) =
+      m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
 
     val wall0 = System.nanoTime()
     // -ingest shares the curate document: same declared source, and the
@@ -118,14 +113,14 @@ object LifecycleBench {
       .exists(_ != 0d), "model snapshot missing or zero")
     require(graft.sources.Parquet.read(spark, s"$work/ml_out/features").count() > 0)
 
-    val stages = times.map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")
     println(f"""{"metric":"lifecycle_e2e","sf":"$sfDir",""" +
       f""""wall_sec":$wall%.2f,"sum_stages_sec":${times.values.sum}%.2f,""" +
-      f""""stages":{$stages},"curated_rows":${curated.count()}}""")
+      f""""stages":${perMode(times.map { case (k, v) => k -> f"$v%.2f" })},""" +
+      f""""jobs":${perMode(jobs)},"curated_rows":${curated.count()}}""")
 
     // ——— incremental ingest (r17, VERDICT r16 item 6): the layouts'
-    // economic argument is the REFRESH path — RefreshProbe proves the
-    // delta merge is row-identical, this records what it COSTS through
+    // economic argument is the REFRESH path — DerivedRefreshSpec pins the
+    // delta merge row-identical, this records what it COSTS through
     // the production entry (`-ingest -from prev`) vs the cold rebuild of
     // the same grown corpus. Three corpora with fresh stamps: prev (90%
     // of the tables, its layouts built untimed — they exist, as in
@@ -161,19 +156,19 @@ object LifecycleBench {
     timed("ingest_cold") { graft.jobs.JobRunner.run(spark,
       graft.jobs.JobRunner.parse(Array("-ingest", "-conf",
         ingestConf("fullcold", fullColdDir)))) }
-    // identity receipt on the expensive merged layer (RefreshProbe owns
-    // the exhaustive version): same postings either path
+    // identity receipt on the expensive merged layer (DerivedRefreshSpec
+    // owns the exhaustive version): same postings either path
     val viaDelta = graft.sources.ShinglePostings(spark, fullDir)
-      .agg(count(lit(1)), sum(expr("fp"))).head
+      .agg(count(lit(1)), sum(expr("fp"))).head()
     val viaCold = graft.sources.ShinglePostings(spark, fullColdDir)
-      .agg(count(lit(1)), sum(expr("fp"))).head
+      .agg(count(lit(1)), sum(expr("fp"))).head()
     require(viaDelta == viaCold,
       s"delta-ingested postings diverge from cold rebuild: $viaDelta vs $viaCold")
     // same receipt one layer up (r18: the label-merge refresh): identical
     // cluster labels either path, and which path the guard chose
     def lblSum(dir: String) = graft.sources.ClusterAssignment(spark, dir)
       .agg(count(lit(1)), sum(col("doc_id") + col("cluster_full") +
-        coalesce(col("cluster_strong"), lit(0L)))).head
+        coalesce(col("cluster_strong"), lit(0L)))).head()
     require(lblSum(fullDir) == lblSum(fullColdDir),
       "delta-refreshed cluster labels diverge from cold rebuild")
     val mergedPath = graft.sources.ClusterAssignment
@@ -187,6 +182,8 @@ object LifecycleBench {
     println(f"""{"metric":"lifecycle_refresh","sf":"$sfDir",""" +
       f""""ingest_delta_sec":${times("ingest_delta")}%.2f,""" +
       f""""ingest_cold_sec":${times("ingest_cold")}%.2f,""" +
+      f""""ingest_delta_jobs":${jobs("ingest_delta")},""" +
+      f""""ingest_cold_jobs":${jobs("ingest_cold")},""" +
       f""""cluster_merge_path":$mergedPath,""" +
       f""""bigram_merge_path":$bigramMerged}""")
     spark.stop()

@@ -34,7 +34,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * generator is fully seeded per (source row, replica) — byte-identical
   * corpus across runs, no Date/Random-without-seed anywhere.
   *
-  * The core count comes from SPARK_GRAFT_CPUS (default 32), as in Bench.
+  * The session is Bench's ([[graft.Sessions]]): the core count comes from
+  * SPARK_GRAFT_CPUS, else the machine's core count.
   * Run the residual-wall queries at 32 and at 8 cores (ABBA order across
   * invocations cancels box heat drift) and compare the warm walls: ≈ 4
   * for a compute-bound row with enough parallelism, ≈ 1 names a serial
@@ -64,23 +65,10 @@ object ScaleCanary {
     val mult = args.headOption.flatMap(_.toIntOption).getOrElse(10)
     val names = args.drop(if (args.headOption.exists(_.toIntOption.isDefined)) 1 else 0)
     val targets = if (names.nonEmpty) Targets.filter(names.contains) else Targets
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 20 targets × 2 corpora × 3 reps thrash the default 100-entry
-      // Janino cache (the Bench.scala pitfall) — without this the warm
-      // rows of job-heavy queries (q77's driver assembly) re-pay codegen
-      // compilation every rep and read 5× their bench cost
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val canaryDir = ensureCorpus(spark, mult)
-    println(s"== cpus=$cpus")
+    println(s"== cpus=${graft.Sessions.cpus}")
 
     def walk(p: SparkPlan): Seq[SparkPlan] = (p.collect {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)

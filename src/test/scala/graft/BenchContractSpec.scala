@@ -1,14 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The bench emission contract: the driver parses a bounded ~2000-char
   * stdout tail and records the LAST line. Round 7 lost its bench record
   * ("parsed": null) because the final line outgrew that window; the
   * summary is now built through one guarded function so the failure mode
   * is a loud bench error at emit time, never a silently-unparsed round.
   */
-class BenchContractSpec extends AnyFunSuite {
+class BenchContractSpec extends SparkSpec {
 
   test("the compact summary fits the tail budget with realistic values") {
     val line = Bench.compactSummary(
@@ -26,6 +24,21 @@ class BenchContractSpec extends AnyFunSuite {
       Bench.compactSummary(1.0, 1.0, 63, 0, 3, sfDir = huge)
     }
     assert(e.getMessage.contains("stdout tail"))
+  }
+
+  test("a layout prebuild over a missing sf dir reports every failed build by name") {
+    val missing = java.nio.file.Files.createTempDirectory("bench-prebuild")
+      .resolve("no-such-sf").toString
+    val errors = Bench.prebuildLayouts(spark, missing)
+    assert(errors.map(_._1) == Seq("CorpusStatsEmbeddings", "CorpusStatsDocuments",
+      "DocFingerprints", "TermStats", "SpanStats", "ChunkStats", "ShinglePostings",
+      "PairGraph", "ClusterAssignment", "SplitAssignment", "IvfCentroids",
+      "PqCodebooks", "BucketedEmbeddings", "BpeMerges", "BigramLm"), errors.toString)
+    assert(errors.forall(_._2.nonEmpty), errors.toString)
+    // the errors ride the detail line only: the summary keeps its budget
+    val line = Bench.compactSummary(28.4, 24.8, nQueries = 0, nErrors = 0, runs = 3,
+      sfDir = missing)
+    assert(line.length <= 512)
   }
 
   test("the README headline stays within 25% of the artifact of record") {

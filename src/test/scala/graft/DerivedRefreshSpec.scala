@@ -121,6 +121,22 @@ class DerivedRefreshSpec extends SparkSpec {
     assert(keyedLists(viaApply) == keyedLists(viaRefresh))
   }
 
+  test("refreshed() merges the delta instead of rebuilding the grown corpus") {
+    // corpora of their own: no other case has built their layouts
+    val v1 = writeCorpus(v1Docs, "merge-v1")
+    val v2 = writeCorpus(v1Docs ++ deltaDocs, "merge-v2")
+    val v2Scratch = writeCorpus(v1Docs ++ deltaDocs, "merge-v2s")
+    sources.ShinglePostings(spark, v1) // the previous generation's layout exists
+    val viaRefresh = keyedLists(sources.ShinglePostings.refreshed(spark, v2, v1))
+    // a rebuild inverts the grown corpus's fingerprint layout, building it
+    // first; the merge shingles only the delta. (Job counts cannot tell
+    // the two apart at this scale: the append-only probe's legs are jobs
+    // of their own, so the merge runs more jobs than the rebuild.)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
+      sources.DocFingerprints.layoutPath(v2), "_SUCCESS")), "the refresh rebuilt")
+    assert(viaRefresh == keyedLists(sources.ShinglePostings(spark, v2Scratch)))
+  }
+
   test("randomized appends: refresh == rebuild across seeded corpus/split draws") {
     // a SMALL vocabulary forces heavy shingle sharing, so random draws
     // land df values all around the cap — markers, crossings, kept lists

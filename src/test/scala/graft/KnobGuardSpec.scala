@@ -6,24 +6,45 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Process-global `@volatile` vars are measurement knobs: each one keeps a
-  * second code path alive that only an A/B tool ever selects, and a tool
-  * that fails mid-run leaves the knob flipped for the rest of the JVM.
-  * Production code carries exactly one, a size threshold that picks
-  * between two paths by corpus size.
+/** Process-wide settings live in one place each. A process-global
+  * `@volatile` var is a measurement knob: it keeps a second code path
+  * alive that only an A/B tool ever selects, and a tool that fails mid-run
+  * leaves the knob flipped for the rest of the JVM. A session is built by
+  * [[Sessions.local]] or by JobRunner's spark-submit main, and library
+  * code never writes a caller's session conf: a query running
+  * concurrently on that session would see the write.
   */
 class KnobGuardSpec extends AnyFunSuite {
 
-  test("src/main declares no process-global knob besides TextOps.BpeDriverVocabMax") {
+  private lazy val sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), s"run from the repo root (no $root)")
-    val knob = """@volatile\s+private\[graft\]\s+var\s+(\w+)""".r
-    val found: Seq[(Path, String)] = Files.walk(root).iterator.asScala
+    Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-      .flatMap(p => knob.findAllMatchIn(Files.readString(p)).map(m => (p, m.group(1))))
-    val allowed = (Paths.get("src/main/scala/graft/queries/TextOps.scala"), "BpeDriverVocabMax")
-    assert(found.contains(allowed), s"the allowed knob moved: $found")
-    assert(found.filterNot(_ == allowed).isEmpty,
-      s"new process-global knobs: ${found.filterNot(_ == allowed)}")
+      .map(p => (p, Files.readString(p)))
+  }
+
+  /** (file, matched text) of every match of `re` in `src/main`. */
+  private def matches(re: String): Seq[(String, String)] = sources.flatMap {
+    case (p, text) => re.r.findAllMatchIn(text).map(m => (p.getFileName.toString, m.matched))
+  }
+
+  test("src/main declares no process-global knob") {
+    val knobs = matches("""@volatile\s+private\[graft\]\s+var\s+\w+""")
+    assert(knobs.isEmpty, s"process-global knobs: $knobs")
+  }
+
+  test("src/main builds sessions in Sessions and JobRunner's main only") {
+    val builders = matches("""SparkSession\.builder""").map(_._1)
+    assert(builders.sorted == Seq("JobRunner.scala", "Sessions.scala"), s"builder sites: $builders")
+  }
+
+  test("src/main writes session conf only in Parquet.read's scoped fallback and a private clone") {
+    // Parquet.read sets nanosAsLong for Spark's own inference and puts it back
+    val confSets = matches("""conf\.(set|unset)\(""").map(_._1).distinct
+    assert(confSets == Seq("Parquet.scala"), s"session conf writes: $confSets")
+    // ClonedSession writes the conf of a session it has just cloned
+    val cloneSets = matches("""setConfString\(""").map(_._1).distinct
+    assert(cloneSets == Seq("ClonedSession.scala"), s"SQLConf writes: $cloneSets")
   }
 }

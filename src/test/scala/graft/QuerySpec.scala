@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Per-operator smoke + semantic checks on sf0.001. The DuckDB hash-match
   * gate runs driver-side; these assert plan-independent invariants so
   * `sbt test` catches breakage without the oracle.
@@ -637,18 +639,43 @@ class QuerySpec extends SparkSpec {
       (4L, "cd", "cd", "cdcd", 2L),
       (5L, "e", "f", "ef", 2L)), got.toSeq.toString)
     // the distributed fallback (vocab above the driver bound) must trace
-    // the SAME merges — force it via the bound and compare row-for-row,
-    // on the constructed corpus AND the real documents table
-    queries.TextOps.BpeDriverVocabMax = 0
-    try {
-      val fb = queries.TextOps.q82BpeMerges.fn(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
-      assert(fb.toSeq == got.toSeq, "distributed fallback diverged from driver rounds")
-      val fbReal = queries.TextOps.q82BpeMerges.fn(spark, sf).collect().map(_.toSeq).toSeq
-      queries.TextOps.BpeDriverVocabMax = 200000
-      val drReal = queries.TextOps.q82BpeMerges.fn(spark, sf).collect().map(_.toSeq).toSeq
-      assert(fbReal == drReal, "paths diverged on the documents corpus")
-    } finally queries.TextOps.BpeDriverVocabMax = 200000
+    // the SAME merges as the driver rounds, on the constructed corpus AND
+    // the real documents table. Its round-loop settings (AQE off, one
+    // shuffle partition) reach its own jobs, while the caller's session
+    // reads its own conf during and after the loop.
+    def callerConf = (spark.conf.get("spark.sql.adaptive.enabled"),
+      spark.conf.get("spark.sql.shuffle.partitions"))
+    val before = callerConf
+    Seq(dir, sf).zipWithIndex.foreach { case (d, i) =>
+      val corpus = Tables(spark, d, "documents")
+      val driver = queries.TextOps.learnBpeMergesFrom(corpus)
+      val group = s"bpe-distributed-$i"
+      val loopConfs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties.getProperty("spark.jobGroup.id") == group)
+            loopConfs.add((e.properties.getProperty("spark.sql.adaptive.enabled"),
+              e.properties.getProperty("spark.sql.shuffle.partitions")))
+      }
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+      @volatile var looping = true
+      val watcher = new Thread(() => while (looping) { seen.add(callerConf); Thread.sleep(1) })
+      spark.sparkContext.addSparkListener(listener)
+      watcher.start()
+      // countingJobs drains the listener bus: the listener has seen every job
+      val (distributed, _) =
+        try countingJobs(group)(queries.TextOps.learnBpeMergesFrom(corpus, driverVocabMax = 0))
+        finally {
+          looping = false
+          watcher.join()
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      assert(distributed == driver, s"distributed fallback diverged from driver rounds on $d")
+      assert(seen.asScala.toSet == Set(before), s"the caller's conf changed during the loop: $seen")
+      assert(loopConfs.asScala.count(_ == (("false", "1"))) >= queries.TextOps.BpeRounds,
+        s"the round loop's jobs ran without its settings: $loopConfs")
+    }
+    assert(callerConf == before)
     // q84 applies those merges: hand-traced post-merge symbol counts on
     // the same corpus. Tokens: abab×3 (→ 1 sym via ab,abab), cdcd×2
     // (→ 1 via cd,cdcd), efef (→ 2 via ef), gh (2), ij (2), aaaa

@@ -10,18 +10,9 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 
-  /** Runs `body` under job group `group` (unique per call: the status
-    * tracker keeps earlier groups' jobs) and returns its result with the
-    * number of Spark jobs it launched. The tracker is fed by the listener
-    * bus, so the count is read once the bus has drained.
-    */
-  def countingJobs[T](group: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group, interruptOnCancel = false)
-    val out = try body finally sc.clearJobGroup()
-    org.apache.spark.ListenerBusDrain(sc)
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
+  /** [[Sessions.countingJobs]] on the suite's session. */
+  def countingJobs[T](group: String)(body: => T): (T, Int) =
+    Sessions.countingJobs(spark, group)(body)
 
   /** Runs `body` with session conf `key` set to `value`, then puts the conf
     * back as it was (unset if it was unset).
