@@ -72,35 +72,46 @@ object DerivedLayout {
     * key-only probe while the left-anti delta excludes it, silently
     * keeping the old content's derived rows (stale fingerprints,
     * overcounted df) under a valid stamp (the r19 ADVICE finding) — so
-    * the probe anti-joins on (key, xxhash64(contentCols)) and callers
+    * the probe matches (key, xxhash64(contentCols)) pairs and callers
     * fall back to a full rebuild when it returns false. `contentCols`
     * must list exactly the columns the layout derives from (`text` for
     * the document layouts, `embedding` for the bucketed vectors): an
     * edit to an unrelated column then correctly does NOT force a
     * rebuild. Exact up to a 2^-64 per-row xxhash64 collision.
     *
-    * The survival anti-join alone still passes a DUPLICATE-KEY append
-    * (a new row reusing an old key while the old row also survives):
-    * every delta merge's left-anti would silently drop that row even
-    * though a rebuild counts it, so a second leg requires the count of
-    * new rows carrying an old key to equal the old row count — under
-    * the per-table unique-key invariant, exactly "old rows survive and
-    * nothing else wears their keys" (r20 review finding).
-    * Cost: one take(1) anti-join plus two counts, all shuffling only
-    * (key, sig) pairs — the content columns are read once per side to
-    * hash, still far below the explode/shuffle cost of any rebuild it
-    * guards.
+    * Survival alone still passes a DUPLICATE-KEY append (a new row
+    * reusing an old key while the old row also survives): every delta
+    * merge's left-anti would silently drop that row even though a rebuild
+    * counts it, so the new rows carrying an old key must also number
+    * exactly the old rows — under the per-table unique-key invariant,
+    * exactly "old rows survive and nothing else wears their keys" (r20
+    * review finding).
+    * Cost: one aggregate action over both generations' (key, sig) rows,
+    * tagged by generation: a key-grouped aggregate finds per key the old
+    * signatures missing from the new rows and both row counts, and a
+    * global one sums them. It shuffles only (key, sig) pairs — the content
+    * columns are read once per side to hash — far below the
+    * explode/shuffle cost of any rebuild it guards.
     */
   private[graft] def appendOnly(spark: SparkSession, newDir: String,
       oldDir: String, table: String, key: String,
       contentCols: Seq[String]): Boolean = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    def keyed(dir: String) = graft.Tables(spark, dir, table)
-      .select(col(key), xxhash64(contentCols.map(col): _*).as("__content_sig"))
-    val oldK = keyed(oldDir)
-    val newK = keyed(newDir)
-    oldK.join(newK, Seq(key, "__content_sig"), "left_anti").take(1).isEmpty &&
-      newK.join(oldK.select(key), Seq(key), "left_semi").count() == oldK.count()
+    import org.apache.spark.sql.functions.{array_except, coalesce, col, collect_set, count_if, lit, size, sum, when, xxhash64}
+    def tagged(dir: String, old: Boolean) = graft.Tables(spark, dir, table)
+      .select(col(key), xxhash64(contentCols.map(col): _*).as("sig"), lit(old).as("old"))
+    val perKey = tagged(oldDir, old = true).unionByName(tagged(newDir, old = false))
+      .groupBy(key)
+      .agg(
+        size(array_except(collect_set(when(col("old"), col("sig"))),
+          collect_set(when(!col("old"), col("sig"))))).as("missing"),
+        count_if(col("old")).as("olds"),
+        count_if(!col("old")).as("news"))
+    // an old row keyed null matches nothing: it counts as missing
+    val totals = perKey.agg(
+      coalesce(sum(when(col(key).isNull, col("olds")).otherwise(col("missing"))), lit(0L)),
+      coalesce(sum("olds"), lit(0L)),
+      coalesce(sum(when(col("olds") > 0, col("news"))), lit(0L))).head()
+    totals.getLong(0) == 0 && totals.getLong(2) == totals.getLong(1)
   }
 
   private def getOrBuild(spark: SparkSession, target: String,

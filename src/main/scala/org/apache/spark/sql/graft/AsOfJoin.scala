@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
 /** AS-OF JOIN as a first-class operator — the full custom-operator rung of
   * the ladder (SURVEY §4 customization list; guide: LogicalPlan + Strategy +
@@ -52,6 +53,9 @@ case class AsOfJoinExec(
 
   override def output: Seq[Attribute] = left.output ++ right.output
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(leftKey)) :: ClusteredDistribution(Seq(rightKey)) :: Nil
 
@@ -71,6 +75,7 @@ case class AsOfJoinExec(
     val keyOrd = TypeUtils.getInterpretedOrdering(leftKey.dataType)
     val timeOrd = TypeUtils.getInterpretedOrdering(leftTime.dataType)
     val outAttrs = output
+    val numOutputRows = longMetric("numOutputRows")
 
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       val joiner = UnsafeProjection.create(outAttrs, outAttrs)
@@ -113,6 +118,7 @@ case class AsOfJoinExec(
               }
             }
             if (candidate != null && keyOrd.compare(candidateKey, lKey) == 0) {
+              numOutputRows += 1
               return joiner(joined(l, candidate))
             }
             // inner semantics: left rows with no as-of match drop out

@@ -1,7 +1,11 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Generate, GlobalLimit, LocalRelation, LogicalPlan, RebalancePartitions, Repartition, RepartitionOperation, Sort, UnaryNode, Window}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionSet}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Generate, GlobalLimit, LeafNode, LocalRelation, LogicalPlan, Project, RebalancePartitions, Repartition, RepartitionOperation, Sort, UnaryNode, Window}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
@@ -10,6 +14,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.graft.BroadcastKeys
 import org.apache.spark.sql.internal.SQLConf
 
 /** A global sort whose input fits one AQE advisory partition
@@ -22,16 +27,22 @@ import org.apache.spark.sql.internal.SQLConf
   *     built cache, a local relation): `SortExec ← CoalesceExec(1)`. AQE
   *     re-plans after each stage; this plan has one exchange fewer than the
   *     range sort, so AQE adopts it before the range stage is created.
-  *   - The input read from scans whose size estimate fits:
+  *   - The input read from scans whose size bound fits:
   *     `SortExec ← ShuffleExchangeExec(SinglePartition)`, which drops the
   *     sampling job; not where the input is one partition already.
   *
-  * Neither arm fires without AQE partition coalescing, over a streaming
-  * input, or with a row-multiplying `Generate`/`Expand` under the sort
-  * (its size estimate does not multiply rows). Spark estimates a join as
-  * the product of its inputs, so a corpus-scale sort keeps its range
-  * exchange. Installed on a session at its first footer-typed parquet
-  * read ([[install]]) and by [[GraftExtensions]].
+  * The input's size is an upper bound, taken only where it is below
+  * Spark's estimate ([[sizeBound]]). Spark estimates a join as the product
+  * of its inputs; a lookup join whose build side has unique join keys
+  * (Catalyst's distinct keys, or a finished broadcast's hash relation)
+  * emits at most one row per streamed row, and an [[AsOfJoin]] at most one
+  * per left row, so such a join is bounded by that side. A corpus-scale
+  * streamed side still exceeds one advisory partition and keeps its range
+  * exchange. Neither arm fires without AQE partition coalescing, over a
+  * streaming input, or with a row-multiplying `Generate`/`Expand` under
+  * the sort (its size estimate does not multiply rows). Installed on a
+  * session at its first footer-typed parquet read ([[install]]) and by
+  * [[GraftExtensions]].
   */
 object SmallSortStrategy extends Strategy {
 
@@ -52,8 +63,61 @@ object SmallSortStrategy extends Strategy {
     conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled &&
       !child.isStreaming &&
       !child.exists { case _: Generate | _: Expand => true; case _ => false } &&
-      child.stats.sizeInBytes <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      sizeBound(child) <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
   }
+
+  /** An upper bound on `p`'s output bytes, no larger than Spark's estimate:
+    * the row bound times the output row width (Spark's per-row size: 8
+    * bytes plus each column's default size), else the kept input's bound
+    * scaled by the width ratio (a kept input read from a scan, which has
+    * no row count).
+    */
+  private def sizeBound(p: LogicalPlan): BigInt = {
+    def width(q: LogicalPlan) = EstimationUtils.getSizePerRow(q.output)
+    val bound = rowBound(p).map(_ * width(p))
+      .orElse(keptFrom(p).map(c => sizeBound(c) * width(p) / width(c)).minOption)
+    bound.fold(p.stats.sizeInBytes)(_ min p.stats.sizeInBytes)
+  }
+
+  /** An upper bound on `p`'s output rows: a materialized leaf's measured
+    * count, the bound of an input `p` emits at most one row per row of
+    * ([[keptFrom]]), or Spark's own `maxRows`, whichever is least.
+    */
+  private def rowBound(p: LogicalPlan): Option[BigInt] = {
+    val measured = p match {
+      case l: LeafNode if materialized(l) => l.stats.rowCount
+      case _ => None
+    }
+    (measured ++ keptFrom(p).flatMap(rowBound) ++ p.maxRows.map(BigInt(_))).minOption
+  }
+
+  /** The inputs `p` emits at most one row per row of: the child of a
+    * Project, Filter or grouped Aggregate; an [[AsOfJoin]]'s left side; an
+    * equi-join's streamed side where the other (build) side has unique join
+    * keys (Inner either way, LeftOuter by its left, RightOuter by its right).
+    */
+  private def keptFrom(p: LogicalPlan): Seq[LogicalPlan] = p match {
+    case Project(_, c) => Seq(c)
+    case Filter(_, c) => Seq(c)
+    case a: Aggregate if a.groupingExpressions.nonEmpty => Seq(a.child)
+    case j: AsOfJoin => Seq(j.left)
+    case ExtractEquiJoinKeys(t, lk, rk, _, _, l, r, _) =>
+      Option.when((t == Inner || t == LeftOuter) && uniqueKeys(r, rk))(l).toSeq ++
+        Option.when((t == Inner || t == RightOuter) && uniqueKeys(l, lk))(r)
+    case _ => Nil
+  }
+
+  /** Whether `side` holds at most one row per value of `keys`: Catalyst's
+    * distinct keys, of the side or of a query stage's logical plan (a
+    * `LogicalQueryStage` exposes none), or a finished broadcast stage's
+    * hash relation ([[BroadcastKeys.unique]]).
+    */
+  private def uniqueKeys(side: LogicalPlan, keys: Seq[Expression]): Boolean =
+    side.distinctKeys.exists(_.subsetOf(ExpressionSet(keys))) || (side match {
+      case s: LogicalQueryStage =>
+        uniqueKeys(s.logicalPlan, keys) || BroadcastKeys.unique(s.physicalPlan, keys)
+      case _ => false
+    })
 
   private def materialized(leaf: LogicalPlan): Boolean = leaf match {
     case s: LogicalQueryStage =>

@@ -33,6 +33,17 @@ class AsOfJoinSpec extends SparkSpec {
     assert(!p.contains("HashAggregate"), "must not fall back to aggregate top-1")
   }
 
+  test("AsOfJoinExec's numOutputRows after q24 equals the rows q24 returns") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graft.AsOfJoinExec
+    val df = queries.EventOps.q24AsofJoin.fn(spark, sf)
+    val rows = df.collect().length
+    val joins = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case j: AsOfJoinExec => j }
+    assert(joins.size == 1, df.queryExecution.executedPlan)
+    assert(rows > 0 && joins.head.metrics("numOutputRows").value == rows)
+  }
+
   test("as-of semantics: no picked order after the event, latest picked") {
     val df = viaOperator
     assert(df.filter(col("o_orderdate") > col("ts")).count() == 0)

@@ -130,8 +130,8 @@ class DerivedRefreshSpec extends SparkSpec {
     val viaRefresh = keyedLists(sources.ShinglePostings.refreshed(spark, v2, v1))
     // a rebuild inverts the grown corpus's fingerprint layout, building it
     // first; the merge shingles only the delta. (Job counts cannot tell
-    // the two apart at this scale: the append-only probe's legs are jobs
-    // of their own, so the merge runs more jobs than the rebuild.)
+    // the two apart at this scale: the append-only probe runs jobs of its
+    // own, so the merge runs more jobs than the rebuild.)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
       sources.DocFingerprints.layoutPath(v2), "_SUCCESS")), "the refresh rebuilt")
     assert(viaRefresh == keyedLists(sources.ShinglePostings(spark, v2Scratch)))
@@ -438,6 +438,26 @@ class DerivedRefreshSpec extends SparkSpec {
       .termDfFrame(Tables(spark, dupDir, "documents")).select("w", "df"))
     assert(tsGot == tsExpect,
       "TermStats.refreshed must rebuild (count the duplicate-keyed row) on a dup-key append")
+  }
+
+  test("the append-only probe is one aggregate action; an old row keyed null fails it") {
+    val (ok, jobs) = countingJobs("append-only-probe")(
+      sources.DerivedLayout.appendOnly(spark, v2Dir, v1Dir, "documents", "doc_id", Seq("text")))
+    assert(ok, "true append must pass the probe")
+    assert(jobs == 3, s"the probe ran $jobs jobs")
+    // a null key matches nothing, so every delta merge's left-anti would
+    // keep the surviving row a second time
+    def withNull(rows: Seq[(Option[Long], String)], tag: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory(s"refresh-$tag").toString
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      dir
+    }
+    val old = Seq((Some(1L), "a b c"), (None, "d e f"))
+    val n1 = withNull(old, "null1")
+    val n2 = withNull(old :+ ((Some(2L), "g h i")), "null2")
+    assert(!sources.DerivedLayout.appendOnly(spark, n2, n1, "documents", "doc_id", Seq("text")),
+      "an old row keyed null must fail the probe")
   }
 
   test("BigramLm merge declines when the old vocabulary is UNDER-FULL and the delta adds a word") {

@@ -72,6 +72,54 @@ class PlanSpec extends SparkSpec {
     assert(!finalPlanOf(docs.select(col("text")).orderBy("text")).contains("rangepartitioning"))
   }
 
+  test("sorts above unique-keyed lookup joins (q21, q24, q28, q31) sort in one partition") {
+    Seq("q21_ngram_jaccard", "q24_asof_join", "q28_embedding_neardup", "q31_minhash_lsh")
+      .foreach { name =>
+        try assert(!finalPlanOf(SparkEntry.queries(name)(spark, sf)).contains("rangepartitioning"), name)
+        finally Caches.clearAll(spark)
+      }
+  }
+
+  test("q45: the sort above its scanned lookup join gathers through SinglePartition") {
+    val p = finalPlanOf(queries.SqlSurface.q45CorrelatedSubquery.fn(spark, sf))
+    assert(p.contains("Exchange SinglePartition"), p)
+    assert(!p.contains("rangepartitioning"), p)
+  }
+
+  /** A built 20000-row cache (id, k), ids out of order, joined to a
+    * broadcast lookup table on `k` and sorted by id: 20000 streamed rows of 32 bytes (Spark's row width
+    * of id, k, v) when the lookup keys are unique, twice that when each
+    * key appears twice.
+    */
+  private def sortAboveLookupJoin(advisory: String, dupKeys: Boolean): String = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import spark.implicits._
+    val streamed = spark.range(0, 20000, 1, 4).select((col("id") * 7919 % 20000).as("id"))
+      .select(col("id"), (col("id") % 100).as("k")).persist()
+    try {
+      streamed.count()
+      val lookup = (0 until (if (dupKeys) 200 else 100))
+        .map(i => ((i % 100).toLong, i.toLong)).toDF("k", "v")
+      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory) {
+        val df = streamed.join(broadcast(lookup), "k").orderBy("id")
+        val ids = df.collect().map(_.getLong(1)).toSeq
+        assert(ids == (0L until 20000L).flatMap(i => Seq.fill(if (dupKeys) 2 else 1)(i)))
+        finalPlanOf(df)
+      }
+    } finally streamed.unpersist(blocking = true)
+  }
+
+  test("a sort above a lookup join whose broadcast keys repeat keeps its range exchange") {
+    // 1m holds the 640 KB the streamed side bounds a unique-keyed join to,
+    // not the 1.28 MB this join emits
+    assert(!sortAboveLookupJoin("1m", dupKeys = false).contains("rangepartitioning"))
+    assert(sortAboveLookupJoin("1m", dupKeys = true).contains("Exchange rangepartitioning"))
+  }
+
+  test("a sort above a unique-keyed lookup join whose streamed side exceeds the advisory size keeps its range exchange") {
+    assert(sortAboveLookupJoin("100k", dupKeys = false).contains("Exchange rangepartitioning"))
+  }
+
   test("q105: the sort over its TakeOrdered head adds no exchange; 1 job") {
     assert(ledgerJobs("q105_boilerplate_spans") == 1)
   }

@@ -971,7 +971,7 @@ class QuerySpec extends SparkSpec {
       name -> n
     }.toMap
     assert(Seq("q21_ngram_jaccard", "q31_minhash_lsh", "q71_image_neardup").map(jobs) ==
-      Seq(11, 8, 6), s"job counts moved: $jobs")
+      Seq(9, 6, 6), s"job counts moved: $jobs")
   }
 }
 
