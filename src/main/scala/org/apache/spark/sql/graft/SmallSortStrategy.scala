@@ -1,10 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionSet}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, ExpressionSet, NamedExpression, UnsafeRow}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Generate, GlobalLimit, LeafNode, LocalRelation, LogicalPlan, Project, RebalancePartitions, Repartition, RepartitionOperation, Sort, UnaryNode, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Generate, GlobalLimit, LocalRelation, LogicalPlan, Project, RebalancePartitions, Repartition, RepartitionOperation, Sort, UnaryNode, Window}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.classic.Strategy
@@ -31,18 +31,19 @@ import org.apache.spark.sql.internal.SQLConf
   *     `SortExec ← ShuffleExchangeExec(SinglePartition)`, which drops the
   *     sampling job; not where the input is one partition already.
   *
-  * The input's size is an upper bound, taken only where it is below
-  * Spark's estimate ([[sizeBound]]). Spark estimates a join as the product
-  * of its inputs; a lookup join whose build side has unique join keys
-  * (Catalyst's distinct keys, or a finished broadcast's hash relation)
-  * emits at most one row per streamed row, and an [[AsOfJoin]] at most one
-  * per left row, so such a join is bounded by that side. A corpus-scale
-  * streamed side still exceeds one advisory partition and keeps its range
-  * exchange. Neither arm fires without AQE partition coalescing, over a
-  * streaming input, or with a row-multiplying `Generate`/`Expand` under
-  * the sort (its size estimate does not multiply rows). Installed on a
-  * session at its first footer-typed parquet read ([[install]]) and by
-  * [[GraftExtensions]].
+  * The input's size is a bound in bytes, taken only where it is below
+  * Spark's estimate ([[sizeBound]]); a materialized leaf gives the bytes
+  * AQE or the cache measured. Spark estimates a join as the product of its
+  * inputs; a lookup join whose build side has unique join keys (Catalyst's
+  * distinct keys, or a finished broadcast's hash relation) emits at most
+  * one row per streamed row, and an [[AsOfJoin]] at most one per left row,
+  * so such a join is bounded by that side, where the columns it attaches
+  * are fixed-width. A corpus-scale streamed side still exceeds one advisory
+  * partition and keeps its range exchange. Neither arm fires without AQE
+  * partition coalescing, over a streaming input, or with a row-multiplying
+  * `Generate`/`Expand` under the sort (its size estimate does not multiply
+  * rows). Installed on a session at its first footer-typed parquet read
+  * ([[install]]) and by [[GraftExtensions]].
   */
 object SmallSortStrategy extends Strategy {
 
@@ -63,48 +64,54 @@ object SmallSortStrategy extends Strategy {
     conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled &&
       !child.isStreaming &&
       !child.exists { case _: Generate | _: Expand => true; case _ => false } &&
-      sizeBound(child) <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      sizeBound(child, child.outputSet) <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
   }
 
-  /** An upper bound on `p`'s output bytes, no larger than Spark's estimate:
-    * the row bound times the output row width (Spark's per-row size: 8
-    * bytes plus each column's default size), else the kept input's bound
-    * scaled by the width ratio (a kept input read from a scan, which has
-    * no row count).
+  /** A bound on `p`'s output bytes, no larger than Spark's estimate:
+    * the least of that estimate (at a materialized leaf, its measured bytes)
+    * and, for each input `p` emits at most one row per row of
+    * ([[keptFrom]]), that input's bound scaled by the ratio of the two row
+    * widths (Spark's per-row size: 8 bytes plus each column's default size).
+    * `used` holds the columns of `p` whose length reaches the sort.
     */
-  private def sizeBound(p: LogicalPlan): BigInt = {
+  private def sizeBound(p: LogicalPlan, used: AttributeSet): BigInt = {
     def width(q: LogicalPlan) = EstimationUtils.getSizePerRow(q.output)
-    val bound = rowBound(p).map(_ * width(p))
-      .orElse(keptFrom(p).map(c => sizeBound(c) * width(p) / width(c)).minOption)
-    bound.fold(p.stats.sizeInBytes)(_ min p.stats.sizeInBytes)
+    (p.stats.sizeInBytes +: keptFrom(p, used).map { case (c, u) =>
+      sizeBound(c, u) * width(p) / width(c)
+    }).min
   }
 
-  /** An upper bound on `p`'s output rows: a materialized leaf's measured
-    * count, the bound of an input `p` emits at most one row per row of
-    * ([[keptFrom]]), or Spark's own `maxRows`, whichever is least.
+  /** The inputs `p` emits at most one row per row of, each with its columns
+    * whose length reaches the sort: the child of a Project, Filter or grouped
+    * Aggregate; an [[AsOfJoin]]'s left side; an equi-join's streamed side
+    * where the other (build) side has unique join keys (Inner either way,
+    * LeftOuter by its left, RightOuter by its right). A join counts only
+    * where the build-side columns that reach the sort are fixed-width: the
+    * width ratio counts a string or an array at a default size, not at its
+    * length, so a lookup that attaches text is not bounded by its streamed
+    * side, while one whose embeddings only feed a dot product is.
     */
-  private def rowBound(p: LogicalPlan): Option[BigInt] = {
-    val measured = p match {
-      case l: LeafNode if materialized(l) => l.stats.rowCount
-      case _ => None
+  private def keptFrom(p: LogicalPlan, used: AttributeSet)
+      : Seq[(LogicalPlan, AttributeSet)] = {
+    // a fixed-width result ends the lineage of the columns it reads
+    def through(exprs: Seq[NamedExpression]) = AttributeSet(exprs.filter(e =>
+      used.contains(e.toAttribute) && !UnsafeRow.isFixedLength(e.dataType)).flatMap(_.references))
+    def lookup(streamed: LogicalPlan, build: LogicalPlan) = Option.when(
+      used.forall(a => !build.outputSet.contains(a) || UnsafeRow.isFixedLength(a.dataType)))(
+      streamed -> used.filter(streamed.outputSet.contains))
+    p match {
+      case Project(list, c) => Seq(c -> through(list))
+      case Filter(_, c) => Seq(c -> used)
+      case a: Aggregate if a.groupingExpressions.nonEmpty =>
+        Seq(a.child -> through(a.aggregateExpressions))
+      case j: AsOfJoin => lookup(j.left, j.right).toSeq
+      case ExtractEquiJoinKeys(t, lk, rk, _, _, l, r, _) =>
+        Option.when(t == Inner || t == LeftOuter)(lookup(l, r)).flatten
+          .filter(_ => uniqueKeys(r, rk)).toSeq ++
+          Option.when(t == Inner || t == RightOuter)(lookup(r, l)).flatten
+            .filter(_ => uniqueKeys(l, lk))
+      case _ => Nil
     }
-    (measured ++ keptFrom(p).flatMap(rowBound) ++ p.maxRows.map(BigInt(_))).minOption
-  }
-
-  /** The inputs `p` emits at most one row per row of: the child of a
-    * Project, Filter or grouped Aggregate; an [[AsOfJoin]]'s left side; an
-    * equi-join's streamed side where the other (build) side has unique join
-    * keys (Inner either way, LeftOuter by its left, RightOuter by its right).
-    */
-  private def keptFrom(p: LogicalPlan): Seq[LogicalPlan] = p match {
-    case Project(_, c) => Seq(c)
-    case Filter(_, c) => Seq(c)
-    case a: Aggregate if a.groupingExpressions.nonEmpty => Seq(a.child)
-    case j: AsOfJoin => Seq(j.left)
-    case ExtractEquiJoinKeys(t, lk, rk, _, _, l, r, _) =>
-      Option.when((t == Inner || t == LeftOuter) && uniqueKeys(r, rk))(l).toSeq ++
-        Option.when((t == Inner || t == RightOuter) && uniqueKeys(l, lk))(r)
-    case _ => Nil
   }
 
   /** Whether `side` holds at most one row per value of `keys`: Catalyst's

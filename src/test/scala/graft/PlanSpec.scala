@@ -86,22 +86,45 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("rangepartitioning"), p)
   }
 
+  test("a sort over a built cache of long strings is bounded by its measured bytes") {
+    import org.apache.spark.sql.functions.{col, lit, repeat}
+    val cached = spark.range(0, 2000, 1, 4)
+      .select((col("id") * 7919 % 2000).as("id"), repeat(lit("x"), 2000).as("text")).persist()
+    try {
+      cached.count()
+      // about 4 MB of text measured; 2000 rows at Spark's default row width
+      // of (id, text), 36 bytes, would be 72 KB
+      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m") {
+        val df = cached.orderBy("id")
+        assert(df.collect().map(_.getLong(0)).toSeq == (0L until 2000L))
+        assert(finalPlanOf(df).contains("Exchange rangepartitioning"))
+      }
+    } finally cached.unpersist(blocking = true)
+  }
+
   /** A built 20000-row cache (id, k), ids out of order, joined to a
-    * broadcast lookup table on `k` and sorted by id: 20000 streamed rows of 32 bytes (Spark's row width
-    * of id, k, v) when the lookup keys are unique, twice that when each
-    * key appears twice.
+    * broadcast lookup table (k, v) on `k` under a 1m advisory size and
+    * sorted by id. The cache measures 16 bytes a row, so the streamed bound
+    * scaled to the join's width (id, k, v) is about 430 KB; the join emits
+    * twice that when each lookup key appears twice, and about 4 MB when `v`
+    * is a 200-character string that reaches the sort.
     */
-  private def sortAboveLookupJoin(advisory: String, dupKeys: Boolean): String = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+  private def sortAboveLookupJoin(advisory: String = "1m", dupKeys: Boolean = false,
+      textValues: Boolean = false, textInFilterOnly: Boolean = false): String = {
+    import org.apache.spark.sql.functions.{broadcast, col, length}
     import spark.implicits._
     val streamed = spark.range(0, 20000, 1, 4).select((col("id") * 7919 % 20000).as("id"))
       .select(col("id"), (col("id") % 100).as("k")).persist()
     try {
       streamed.count()
-      val lookup = (0 until (if (dupKeys) 200 else 100))
-        .map(i => ((i % 100).toLong, i.toLong)).toDF("k", "v")
+      val keys = (0 until (if (dupKeys) 200 else 100)).map(i => (i % 100).toLong)
+      val lookup =
+        if (textValues) keys.map(k => (k, "v" * 200 + k)).toDF("k", "v")
+        else keys.zipWithIndex.map { case (k, i) => (k, i.toLong) }.toDF("k", "v")
       withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory) {
-        val df = streamed.join(broadcast(lookup), "k").orderBy("id")
+        val joined = streamed.join(broadcast(lookup), "k")
+        val df = (if (textInFilterOnly) joined.filter(length(col("v")) + col("id") >= 0).select("k", "id")
+                  else joined).orderBy("id")
         val ids = df.collect().map(_.getLong(1)).toSeq
         assert(ids == (0L until 20000L).flatMap(i => Seq.fill(if (dupKeys) 2 else 1)(i)))
         finalPlanOf(df)
@@ -110,14 +133,18 @@ class PlanSpec extends SparkSpec {
   }
 
   test("a sort above a lookup join whose broadcast keys repeat keeps its range exchange") {
-    // 1m holds the 640 KB the streamed side bounds a unique-keyed join to,
-    // not the 1.28 MB this join emits
-    assert(!sortAboveLookupJoin("1m", dupKeys = false).contains("rangepartitioning"))
-    assert(sortAboveLookupJoin("1m", dupKeys = true).contains("Exchange rangepartitioning"))
+    assert(!sortAboveLookupJoin().contains("rangepartitioning"))
+    assert(sortAboveLookupJoin(dupKeys = true).contains("Exchange rangepartitioning"))
   }
 
   test("a sort above a unique-keyed lookup join whose streamed side exceeds the advisory size keeps its range exchange") {
-    assert(sortAboveLookupJoin("100k", dupKeys = false).contains("Exchange rangepartitioning"))
+    assert(sortAboveLookupJoin(advisory = "100k").contains("Exchange rangepartitioning"))
+  }
+
+  test("a sort above a unique-keyed lookup join that adds string columns keeps its range exchange") {
+    assert(sortAboveLookupJoin(textValues = true).contains("Exchange rangepartitioning"))
+    // the same strings read by a filter and dropped before the sort
+    assert(!sortAboveLookupJoin(textValues = true, textInFilterOnly = true).contains("rangepartitioning"))
   }
 
   test("q105: the sort over its TakeOrdered head adds no exchange; 1 job") {
