@@ -25,6 +25,17 @@ import org.apache.spark.storage.StorageLevel
   * loop) needs no early build: that action builds it in one job. One that
   * outlives its query (a stage's frame inside a `-curate` chain) goes
   * through [[persist]], so the job's [[clearCreatedSince]] uncaches it.
+  *
+  * The reuse rule: a scan of a BUILT cache is planned as a
+  * `BuiltCacheScanExec` leaf (`org.apache.spark.sql.graft.BuiltCacheScans`),
+  * which canonicalizes as the scan, so two branches that run the same
+  * exchange over one built cache share one query stage, the second a
+  * `ReusedExchange`: q21's per-doc sizes are shuffled and broadcast once,
+  * not once per branch. An unbuilt cache is scanned under a
+  * `TableCacheQueryStage`, which AQE never shares, so each branch runs its
+  * own exchange: a shared intermediate that feeds the same aggregate or
+  * broadcast into two branches needs [[persistNow]] for the reuse as well
+  * as for the one build job.
   */
 object Caches {
 

@@ -10,7 +10,7 @@ import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.graft.SmallSortStrategy
+import org.apache.spark.sql.graft.GraftExtensions
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -51,10 +51,10 @@ object Parquet {
   /** `nanosAsLong` types TIMESTAMP(NANOS) columns as longs, as
     * `spark.sql.legacy.parquet.nanosAsLong` does, for this read's schema
     * only: the session conf is left as it was. The first read on a session
-    * installs [[SmallSortStrategy]] on it.
+    * installs graft's planner strategies on it ([[GraftExtensions.install]]).
     */
   def read(spark: SparkSession, path: String, nanosAsLong: Boolean = false): DataFrame = {
-    SmallSortStrategy.install(spark)
+    GraftExtensions.install(spark)
     footerSchema(spark, path, nanosAsLong) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => withNanosAsLong(spark, nanosAsLong)(spark.read.parquet(path))

@@ -75,6 +75,8 @@ object ScaleCanary {
       case q: QueryStageExec => walk(q.plan)
       case imts: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
         imts +: walk(imts.relation.cachedPlan)
+      case b: org.apache.spark.sql.graft.BuiltCacheScanExec =>
+        b +: walk(b.scan.relation.cachedPlan)
       case n => Seq(n)
     }).flatten
 

@@ -152,7 +152,8 @@ object AsOfJoinStrategy extends Strategy {
 }
 
 /** User-facing API: resolves columns by name against each side and builds
-  * the logical node; the strategy is registered on first use.
+  * the logical node; graft's strategies are installed on first use
+  * ([[GraftExtensions.install]]).
   */
 object AsOf {
   def join(left: DataFrame, right: DataFrame,
@@ -160,10 +161,7 @@ object AsOf {
       leftTime: String, rightTime: String,
       rightTieBreak: Seq[String] = Nil): DataFrame = {
     val spark = left.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    GraftExtensions.install(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =

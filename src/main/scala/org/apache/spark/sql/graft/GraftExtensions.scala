@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.unsafe.types.UTF8String
 
 /** SparkSessionExtensions entry point: registers the engine's native
@@ -10,8 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * and `--conf spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
   * work on an unmodified Spark distribution (the customization-ladder rung
   * SURVEY §2.11 maps the reference's input-adapter registry onto), and
-  * injects the planner strategies [[AsOfJoinStrategy]] and
-  * [[SmallSortStrategy]].
+  * injects graft's planner strategies ([[GraftExtensions.strategies]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -20,12 +20,32 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((
         new FunctionIdentifier(name), new ExpressionInfo(cls, name), builder))
     }
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => SmallSortStrategy)
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
 object GraftExtensions {
+  /** graft's planner strategies, in planner order: injected by
+    * [[GraftExtensions]], and added by [[install]] to a session built
+    * without it.
+    */
+  val strategies: Seq[Strategy] = Seq(AsOfJoinStrategy, SmallSortStrategy, BuiltCacheScans)
+
+  private val installed = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** Adds each of [[strategies]] its planner lacks to `spark`, once per
+    * session: a caller that removes one from `experimental.extraStrategies`
+    * later keeps it removed. Called at a session's first footer-typed
+    * parquet read and at its first as-of join.
+    */
+  def install(spark: SparkSession): Unit =
+    if (installed.putIfAbsent(spark, true) == null) {
+      val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      s.experimental.extraStrategies = s.experimental.extraStrategies ++
+        strategies.filterNot(s.sessionState.planner.strategies.contains)
+    }
+
   /** Every native expression exposed to SQL, one row per function. */
   private[graft] val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("float_dot", classOf[FloatVectorDot].getName,

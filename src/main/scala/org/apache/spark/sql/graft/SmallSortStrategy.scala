@@ -1,6 +1,5 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, ExpressionSet, NamedExpression, UnsafeRow}
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
@@ -42,8 +41,8 @@ import org.apache.spark.sql.internal.SQLConf
   * partition and keeps its range exchange. Neither arm fires without AQE
   * partition coalescing, over a streaming input, or with a row-multiplying
   * `Generate`/`Expand` under the sort (its size estimate does not multiply
-  * rows). Installed on a session at its first footer-typed parquet read
-  * ([[install]]) and by [[GraftExtensions]].
+  * rows). Installed with graft's other strategies
+  * ([[GraftExtensions.strategies]]).
   */
 object SmallSortStrategy extends Strategy {
 
@@ -154,18 +153,4 @@ object SmallSortStrategy extends Strategy {
     case u: UnaryNode => onePartition(u.child)
     case _ => false
   }
-
-  private val installed = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Adds the strategy to a session built without [[GraftExtensions]], once:
-    * a caller that removes it from `experimental.extraStrategies` later
-    * keeps it removed.
-    */
-  def install(spark: SparkSession): Unit =
-    if (installed.putIfAbsent(spark, true) == null) {
-      val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      if (!s.sessionState.planner.strategies.contains(this))
-        s.experimental.extraStrategies = s.experimental.extraStrategies :+ this
-    }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.graft.{AsOfJoinStrategy, GraftExtensions, GraftFunctions, SmallSortStrategy}
+import org.apache.spark.sql.graft.{AsOfJoinStrategy, BuiltCacheScans, GraftExtensions, GraftFunctions, SmallSortStrategy}
 
 /** Native expressions exposed as SQL functions: runtime registration on a
   * live session, plus the SparkSessionExtensions hook for
@@ -37,7 +37,18 @@ class ExtensionsSpec extends SparkSpec {
       override def injectPlannerStrategy(builder: org.apache.spark.sql.SparkSession =>
           org.apache.spark.sql.execution.SparkStrategy): Unit = injected += builder(spark)
     })
-    assert(injected.result() == Seq(AsOfJoinStrategy, SmallSortStrategy))
+    assert(injected.result() == Seq(AsOfJoinStrategy, SmallSortStrategy, BuiltCacheScans))
+    assert(injected.result() == GraftExtensions.strategies)
+  }
+
+  test("a fresh session holds each of graft's strategies once after its first parquet read") {
+    val fresh = spark.newSession().asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(GraftExtensions.strategies.forall(s => !fresh.sessionState.planner.strategies.contains(s)))
+    graft.sources.Parquet.read(fresh, s"$sf/documents.parquet")
+    graft.sources.Parquet.read(fresh, s"$sf/lineitem.parquet")
+    val planner = fresh.sessionState.planner.strategies
+    assert(GraftExtensions.strategies.forall(s => planner.count(_ == s) == 1),
+      s"strategies: ${planner.map(_.getClass.getSimpleName)}")
   }
 
   test("collect_long_list_capped: exact within cap, truncates past it, skips nulls") {

@@ -430,7 +430,9 @@ class JobRunnerSpec extends SparkSpec {
     val jobs = modeJobs("counted")
     // curate: temperature_mix's composition-time collect must not run the
     // upstream chain a second time, near_dedup builds q21's postings in
-    // one job, not one per scan, and its drop set is a filter of the
+    // one job, not one per scan, and shuffles and broadcasts its per-doc
+    // sizes once (the second branch reuses the exchange over the built
+    // cache), and its drop set is a filter of the
     // labels (no argmin join whose broadcast-or-shuffle choice hangs on
     // stage timing); train: one job per gradient step and
     // per validation pass plus the writes, no separate count; features
@@ -439,7 +441,7 @@ class JobRunnerSpec extends SparkSpec {
     // documents and multimodal_join's embeddings, train's and validation's
     // snapshots, the features and test source) are read footer-typed, with
     // no schema-inference job
-    assert(jobs == Seq("curate" -> 22, "train" -> 24, "features" -> 2, "test" -> 3),
+    assert(jobs == Seq("curate" -> 20, "train" -> 24, "features" -> 2, "test" -> 3),
       s"lifecycle jobs per mode moved: $jobs")
   }
 

@@ -152,9 +152,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("every registered query returns the same rows, in order, without the small sort") {
-    import org.apache.spark.sql.graft.SmallSortStrategy
+    import org.apache.spark.sql.graft.{GraftExtensions, SmallSortStrategy}
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    SmallSortStrategy.install(spark) // so no read below installs it again
+    GraftExtensions.install(spark) // so no read below installs it again
     val strategies = session.experimental.extraStrategies
     assert(strategies.contains(SmallSortStrategy))
     def rows(name: String) =
@@ -165,6 +165,74 @@ class PlanSpec extends SparkSpec {
       try rows(name) != small finally session.experimental.extraStrategies = strategies
     }
     assert(differ.isEmpty, s"rows differ without the small sort: $differ")
+  }
+
+  test("an exchange over a built cache runs once for the branches that read it") {
+    import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.{col, count, lit}
+    // a groupBy self-joined over a built cache: AQE's TableCacheQueryStage
+    // has no canonical form of its own, so under it each branch runs its
+    // own shuffle
+    org.apache.spark.sql.graft.GraftExtensions.install(spark)
+    val df = spark.range(0, 400, 1, 4).withColumn("planSpecReuse", col("id") % 13)
+    Caches.persistNow(df)
+    try {
+      val agg = df.groupBy("planSpecReuse").agg(count(lit(1)).as("n"))
+      val q = agg.as("a").join(agg.as("b"), "planSpecReuse")
+      assert(q.collect().length == 13)
+      val shuffles = planNodes(q.queryExecution.executedPlan).collect {
+        case s: ShuffleQueryStageExec => s.plan
+      }
+      assert(shuffles.count(_.isInstanceOf[ShuffleExchangeExec]) == 1 &&
+        shuffles.count(_.isInstanceOf[ReusedExchangeExec]) == 1,
+        s"shuffle stages: ${shuffles.map(_.nodeName)}")
+      assert(missedReuse(q.queryExecution.executedPlan).isEmpty)
+    } finally df.unpersist(blocking = true)
+  }
+
+  test("an unbuilt cache keeps its TableCacheQueryStage; read twice, it builds in one job") {
+    import org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.{BuiltCacheScanExec, GraftExtensions}
+    GraftExtensions.install(spark)
+    val df = spark.range(0, 300, 1, 4).withColumn("planSpecLazy", col("id") % 7)
+    val before = Caches.snapshot(spark)
+    try {
+      val (plans, _, builds) = countingCacheBuilds("plan-spec-lazy") {
+        Caches.persist(df)
+        Seq.fill(2) {
+          val q = df.groupBy("planSpecLazy").count()
+          q.collect()
+          planNodes(q.queryExecution.executedPlan)
+        }
+      }
+      assert(builds.values.toSeq == Seq(1), s"jobs per cached RDD: $builds")
+      val Seq(first, second) = plans
+      // the first read plans as Spark plans it; the second finds the cache built
+      assert(first.exists(_.isInstanceOf[TableCacheQueryStageExec]) &&
+        !first.exists(_.isInstanceOf[BuiltCacheScanExec]), first.head.treeString)
+      assert(second.exists(_.isInstanceOf[BuiltCacheScanExec]) &&
+        !second.exists(_.isInstanceOf[TableCacheQueryStageExec]), second.head.treeString)
+    } finally Caches.clearCreatedSince(spark, before)
+  }
+
+  test("a built cache's scan leaf publishes the scan's row count and names InMemoryTableScan") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graft.{BuiltCacheScanExec, GraftExtensions}
+    GraftExtensions.install(spark)
+    val df = spark.range(0, 321, 1, 3).withColumn("planSpecMetric", col("id") * 2)
+    Caches.persistNow(df)
+    try {
+      val q = df.filter(col("planSpecMetric") % 3 =!= 1)
+      assert(q.collect().length == 214)
+      val leaf = planNodes(q.queryExecution.executedPlan).collectFirst {
+        case b: BuiltCacheScanExec => b
+      }.getOrElse(fail(q.queryExecution.executedPlan.treeString))
+      // the filter runs above the scan: every cached row is read
+      assert(leaf.metrics("numOutputRows").value == 321)
+      assert(leaf.toString.contains("InMemoryTableScan"), leaf.toString)
+    } finally df.unpersist(blocking = true)
   }
 
   test("q6: global top-k plans as TakeOrderedAndProject, not a full sort") {

@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.graft.BuiltCacheScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session, SURVEY §5
@@ -70,6 +75,36 @@ trait SparkSpec extends AnyFunSuite {
         .groupBy(identity).map { case (id, js) => id -> js.size }
       (out, jobs, builds)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every node of an executed plan: through adaptive plans, into the plan
+    * each query stage ran and into subqueries, but not past a reused
+    * exchange (its plan ran where it was first planned).
+    */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case _: ReusedExchangeExec | _: ReusedSubqueryExec => Nil
+    case _ => (p.children ++ p.subqueries).flatMap(planNodes)
+  })
+
+  /** The exchange pairs of an executed plan that ran twice where one run
+    * could serve both: two exchanges, neither reused, equal in canonical
+    * form once each query stage under them is replaced by the plan it ran
+    * (a cache's query stage by its scan), over scans of one cached relation.
+    */
+  def missedReuse(plan: SparkPlan): Seq[(Exchange, Exchange)] = {
+    def unstaged(p: SparkPlan): SparkPlan = p.transformUp { case s: QueryStageExec => unstaged(s.plan) }
+    def caches(p: SparkPlan) = planNodes(p).collect {
+      case s: InMemoryTableScanExec => s.relation.cacheBuilder
+      case b: BuiltCacheScanExec => b.scan.relation.cacheBuilder
+    }
+    val exchanges = planNodes(plan).collect { case e: Exchange => (e, unstaged(e).canonicalized, caches(e)) }
+    for {
+      ((a, ca, ra), i) <- exchanges.zipWithIndex
+      (b, cb, rb) <- exchanges.drop(i + 1)
+      if (a ne b) && ca == cb && ra.exists(r => rb.exists(_ eq r))
+    } yield (a, b)
   }
 }
 
